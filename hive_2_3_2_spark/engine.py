@@ -26,7 +26,7 @@ from hive_2_3_2_spark.catalog import (
     note_view_override,
     register_star_schema,
 )
-from hive_2_3_2_spark.session import get_spark
+from hive_2_3_2_spark.session import get_spark, local_frame
 
 
 class HiveQLUnsupportedError(NotImplementedError):
@@ -1575,7 +1575,7 @@ class Engine:
             )
             if remembered is None or "UNABLE_TO_INFER_SCHEMA" not in str(exc):
                 raise
-            df = self.spark.createDataFrame([], remembered)
+            df = local_frame(self.spark, [], remembered)
         if name in self.table_schemas:
             df = self._apply_char_read_semantics(
                 df, self.table_schemas[name]
@@ -1621,7 +1621,7 @@ class Engine:
                 raise
             # empty directory tree (last partition dropped/exchanged) —
             # same metastore-parity fallback as register_table
-            return self.spark.createDataFrame([], remembered)
+            return local_frame(self.spark, [], remembered)
 
     #: Roots no mutating statement may write under. The shared test
     #: fixtures are the canonical member: their files are chmod-read-
@@ -1673,7 +1673,7 @@ class Engine:
         return name.split(".")[-1].lower() in self.table_paths
 
     def _rows_affected(self, n: int) -> DataFrame:
-        return self.spark.createDataFrame([(n,)], "rows_affected bigint")
+        return local_frame(self.spark, [(n,)], "rows_affected bigint")
 
     def _semantic_rewrites(self, query: str) -> str:
         """The value-semantics pre-dispatch rewrites. EVERY path that
@@ -1795,7 +1795,13 @@ class Engine:
         (rows_affected) DataFrame like a CLI row count. Each statement
         reads its target once (plus the pruned rewrite) — the affected
         count comes from the rewrite itself (observed metric, footer
-        row counts, or the shared discovery job), never a pre-scan."""
+        row counts, or the shared discovery job), never a pre-scan.
+
+        Results the driver computes itself — SET, DESCRIBE, SHOW, EXPLAIN
+        and the like, and every DML ``rows_affected`` row — are JVM
+        LocalRelations built by ``session.local_frame``: collecting one
+        launches no Spark job, as Hive's CLI answers them without a
+        task."""
         from pyspark.sql import functions as F
 
         # CLI command processors run BEFORE variable substitution would
@@ -1952,8 +1958,8 @@ class Engine:
             # lock manager (like Hive under the no-op DummyTxnManager):
             # the lock list is ALWAYS empty; the typed columns mirror
             # ShowLocksResponseElement so tooling can still bind.
-            return self.spark.createDataFrame(
-                [],
+            return local_frame(
+                self.spark, [],
                 "lockid string, database string, tab_name string, "
                 "partition string, lock_state string, lock_type string, "
                 "transaction_id string",
@@ -1964,13 +1970,13 @@ class Engine:
             # non-transactional engine -> structurally-correct empty
             # result, matching Hive without ACID enabled.
             if m.group(1).upper() == "TRANSACTIONS":
-                return self.spark.createDataFrame(
-                    [],
+                return local_frame(
+                    self.spark, [],
                     "txnid bigint, state string, startedtime bigint, "
                     "lastheartbeattime bigint, user string, host string",
                 )
-            return self.spark.createDataFrame(
-                [],
+            return local_frame(
+                self.spark, [],
                 "compactionid bigint, dbname string, tabname string, "
                 "partname string, type string, state string, "
                 "workerid string, starttime bigint, duration bigint",
@@ -2581,7 +2587,7 @@ class Engine:
         )
 
     def _conf_frame(self, rows: list[tuple[str, str | None]]) -> DataFrame:
-        return self.spark.createDataFrame(rows, "name string, value string")
+        return local_frame(self.spark, rows, "name string, value string")
 
     def _run_set(self, arg: str | None) -> DataFrame:
         """SET / SET -v / SET name / SET name=value — SetProcessor parity
@@ -2665,8 +2671,8 @@ class Engine:
             listed = self.resources[kind]
             if paths:
                 listed = [p for p in listed if p in paths]
-            return self.spark.createDataFrame(
-                [(p,) for p in listed], "resource string"
+            return local_frame(
+                self.spark, [(p,) for p in listed], "resource string"
             )
         if not paths:
             raise HiveQLUnsupportedError(
@@ -2686,8 +2692,8 @@ class Engine:
             for p in paths:
                 if p in self.resources[kind]:
                     self.resources[kind].remove(p)
-        return self.spark.createDataFrame(
-            [(p,) for p in self.resources[kind]], "resource string"
+        return local_frame(
+            self.spark, [(p,) for p in self.resources[kind]], "resource string"
         )
 
     def _run_create_macro(self, m: re.Match[str]) -> DataFrame:
@@ -2802,8 +2808,8 @@ class Engine:
         }.get((mode or "").lower(), "formatted")
 
         def frame(lines: list[str]) -> DataFrame:
-            return self.spark.createDataFrame(
-                [(ln,) for ln in lines], "plan string"
+            return local_frame(
+                self.spark, [(ln,) for ln in lines], "plan string"
             )
 
         def target_lines(name: str, verb: str) -> list[str]:
@@ -3065,7 +3071,7 @@ class Engine:
         path = location or os.path.join(
             scratch_root("ddl"), f"like_{tkey}"
         )
-        self.spark.createDataFrame([], schema).write.mode(
+        local_frame(self.spark, [], schema).write.mode(
             "overwrite"
         ).parquet(path)
         self.register_table(tkey, path)
@@ -3112,8 +3118,8 @@ class Engine:
                 )
                 names = [n for n in names if rx.match(n)]
             if names:
-                macro_df = self.spark.createDataFrame(
-                    [(n,) for n in names], base.schema
+                macro_df = local_frame(
+                    self.spark, [(n,) for n in names], base.schema
                 )
                 col = base.columns[0]
                 base = base.union(macro_df).distinct().orderBy(col)
@@ -3214,8 +3220,8 @@ class Engine:
                 lines.extend(doc)
             else:
                 lines.append(f"Function '{key}' does not exist.")
-        return self.spark.createDataFrame(
-            [(ln,) for ln in lines], "function_desc string"
+        return local_frame(
+            self.spark, [(ln,) for ln in lines], "function_desc string"
         )
 
     # SHOW CONF serves the known Hive knobs this engine actually honors
@@ -3265,7 +3271,8 @@ class Engine:
                 f"{key!r} (the engine serves the Hive knobs it honors; "
                 "Spark-side settings read via SET spark....)"
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [info], "default string, type string, description string"
         )
 
@@ -3307,8 +3314,8 @@ class Engine:
                 walk(ch.apply(i), depth + 1)
 
         walk(qe.executedPlan(), 0)
-        return self.spark.createDataFrame(
-            [(ln,) for ln in lines], "plan string"
+        return local_frame(
+            self.spark, [(ln,) for ln in lines], "plan string"
         )
 
     def _run_create_database(self, m: re.Match[str]) -> DataFrame:
@@ -3423,7 +3430,8 @@ class Engine:
             pstr = "{" + ", ".join(
                 f"{k}={v}" for k, v in sorted(params.items())
             ) + "}"
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(name.lower(), comment, location, owner, "USER", pstr)],
             "db_name string, comment string, location string, "
             "owner_name string, owner_type string, parameters string",
@@ -3446,8 +3454,8 @@ class Engine:
             )
             lines += body.split("\n")
             lines.append(")")
-        return self.spark.createDataFrame(
-            [(ln,) for ln in lines], "createdb_stmt string"
+        return local_frame(
+            self.spark, [(ln,) for ln in lines], "createdb_stmt string"
         )
 
     def _run_export(
@@ -3698,7 +3706,7 @@ class Engine:
 
             n = parquet_row_count(path, self.spark)
             schema = self._target_frame(key).schema
-            empty = self.spark.createDataFrame([], schema)
+            empty = local_frame(self.spark, [], schema)
             staging = f"{path}__truncate_staging"
             shutil.rmtree(staging, ignore_errors=True)
             empty.coalesce(1).write.parquet(staging)
@@ -4045,8 +4053,8 @@ class Engine:
                         for f in data
                     )
                 rows.append((rel, nf, sz))
-            return self.spark.createDataFrame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "partition string, num_files bigint, "
                 "total_size_bytes bigint",
             )
@@ -4063,8 +4071,8 @@ class Engine:
                     os.path.getsize(os.path.join(root, f)) for f in data
                 )
         if noscan:
-            return self.spark.createDataFrame(
-                [(n_files, size)],
+            return local_frame(
+                self.spark, [(n_files, size)],
                 "num_files bigint, total_size_bytes bigint",
             )
         if self._mixed_format(key):
@@ -4081,8 +4089,8 @@ class Engine:
             "fp": fp,
         }
         self._fp_memo[key] = fp  # ANALYZE is a re-fingerprint event
-        return self.spark.createDataFrame(
-            [(n, size)], "num_rows bigint, total_size_bytes bigint"
+        return local_frame(
+            self.spark, [(n, size)], "num_rows bigint, total_size_bytes bigint"
         )
 
     @staticmethod
@@ -4168,8 +4176,8 @@ class Engine:
             rows.append((rel, n, size))
         self.part_basic_stats[key] = store
         self._fp_memo[key] = fp  # ANALYZE is a re-fingerprint event
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "partition string, num_rows bigint, total_size_bytes bigint",
         )
 
@@ -4273,8 +4281,8 @@ class Engine:
                     str(s["max"]) if s["max"] is not None else None,
                 )
             )
-        return self.spark.createDataFrame(
-            out_rows,
+        return local_frame(
+            self.spark, out_rows,
             "col_name string, data_type string, num_nulls bigint, "
             "distinct_count bigint, min string, max string",
         )
@@ -4373,8 +4381,8 @@ class Engine:
                 "max_col_len": max(lens) if lens else None,
             }
         self._fp_memo[key] = fp  # ANALYZE is a re-fingerprint event
-        return self.spark.createDataFrame(
-            out_rows,
+        return local_frame(
+            self.spark, out_rows,
             "partition string, col_name string, data_type string, "
             "num_nulls bigint, distinct_count bigint, min string, "
             "max string",
@@ -4574,7 +4582,7 @@ class Engine:
         schema = StructType(
             [StructField(by_lower[c], StringType()) for c in cols]
         )
-        df = self.spark.createDataFrame(sorted(seen, key=repr), schema)
+        df = local_frame(self.spark, sorted(seen, key=repr), schema)
         declared = {
             f.name.lower(): f.dataType
             for f in self._declared_schema(key).fields
@@ -4827,8 +4835,8 @@ class Engine:
             # constants-only select returns one row PER TABLE ROW in
             # real execution — not a stats shape
             return None
-        return self.spark.createDataFrame(
-            [tuple(out_vals)], StructType(out_fields)
+        return local_frame(
+            self.spark, [tuple(out_vals)], StructType(out_fields)
         )
 
     def _run_describe_column(self, table: str, column: str) -> DataFrame:
@@ -4859,8 +4867,8 @@ class Engine:
             ("avg_col_len", fmt(s.get("avg_col_len"))),
             ("max_col_len", fmt(s.get("max_col_len"))),
         ]
-        return self.spark.createDataFrame(
-            rows, "info_name string, info_value string"
+        return local_frame(
+            self.spark, rows, "info_name string, info_value string"
         )
 
     def _run_msck(self, table: str) -> DataFrame:
@@ -6038,8 +6046,8 @@ class Engine:
         from pyspark.sql.types import StructField, StructType
 
         try:
-            self.spark.createDataFrame(
-                [], StructType([StructField("c", old)])
+            local_frame(
+                self.spark, [], StructType([StructField("c", old)])
             ).select(F.col("c").cast(new))
             return True
         except Exception:
@@ -6872,7 +6880,8 @@ class Engine:
             f"DESCRIBE {modifier.strip()} {table}"
         ).collect()
         rows = [tuple(r) for r in base] + self._constraint_rows(key)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "col_name string, data_type string, comment string"
         )
 
@@ -7039,8 +7048,8 @@ class Engine:
             f"maxFileSize:{max(sizes) if sizes else 0}",
             f"minFileSize:{min(sizes) if sizes else 0}",
         ]
-        return self.spark.createDataFrame(
-            [(ln,) for ln in lines], "tab_name string"
+        return local_frame(
+            self.spark, [(ln,) for ln in lines], "tab_name string"
         )
 
     def _run_show_tblproperties(
@@ -7067,19 +7076,19 @@ class Engine:
                 raise HiveQLUnsupportedError(
                     f"table {key!r} has no property {name!r}"
                 )
-            return self.spark.createDataFrame(
-                [(props[name],)], "value string"
+            return local_frame(
+                self.spark, [(props[name],)], "value string"
             )
-        return self.spark.createDataFrame(
-            sorted(props.items()), "key string, value string"
+        return local_frame(
+            self.spark, sorted(props.items()), "key string, value string"
         )
 
     def _run_show_columns(self, table: str) -> DataFrame:
         """SHOW COLUMNS FROM t — column names only, declared order
         (Hive's output shape: one ``field`` column)."""
         key = self._resolve_dml_table(table)
-        return self.spark.createDataFrame(
-            [(f.name,) for f in self._declared_schema(key).fields],
+        return local_frame(
+            self.spark, [(f.name,) for f in self._declared_schema(key).fields],
             "field string",
         )
 
@@ -7206,8 +7215,8 @@ class Engine:
             )
             for spec in specs
         )
-        return self.spark.createDataFrame(
-            [(ln,) for ln in lines], "partition string"
+        return local_frame(
+            self.spark, [(ln,) for ln in lines], "partition string"
         )
 
     def _run_alter_view_rename(self, old: str, new: str) -> DataFrame:
@@ -7418,7 +7427,8 @@ class Engine:
                 if aliases
                 else ""
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(f"CREATE VIEW `{vkey}` {alias_sql}AS {self.views[vkey]}",)],
                 "createtab_stmt string",
             )
@@ -7442,8 +7452,8 @@ class Engine:
         lines.append("STORED AS PARQUET")
         lines.append("LOCATION")
         lines.append(f"  '{self.table_paths[key]}'")
-        return self.spark.createDataFrame(
-            [("\n".join(lines),)], "createtab_stmt string"
+        return local_frame(
+            self.spark, [("\n".join(lines),)], "createtab_stmt string"
         )
 
     def _run_describe(self, table: str, modifier: str | None) -> DataFrame:
@@ -7496,7 +7506,8 @@ class Engine:
                 rows += [("", "", None), ("# Table Parameters", "", None)]
                 rows += [(k, v, None) for k, v in sorted(props.items())]
             rows += self._constraint_rows(key)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "col_name string, data_type string, comment string"
         )
 
@@ -7561,7 +7572,8 @@ class Engine:
                         None,
                     ),
                 ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "col_name string, data_type string, comment string"
         )
 
@@ -7602,8 +7614,8 @@ class Engine:
                     for c, v in want.items()
                 )
             ]
-        return self.spark.createDataFrame(
-            [(r,) for r in rels], "partition string"
+        return local_frame(
+            self.spark, [(r,) for r in rels], "partition string"
         )
 
     def _run_alter_partition(self, m: re.Match[str]) -> DataFrame:
@@ -7776,8 +7788,8 @@ class Engine:
             if shared_src is not None:
                 shared_src.unpersist()
                 self.spark.catalog.dropTempView("__mi_shared_src")
-        return self.spark.createDataFrame(
-            results, "target_table string, rows_affected bigint"
+        return local_frame(
+            self.spark, results, "target_table string, rows_affected bigint"
         )
 
     @staticmethod
@@ -8098,12 +8110,16 @@ class Engine:
             # so the named partition is swapped (= cleared) even when
             # the SELECT returns zero rows (Hive semantics) — and so the
             # autogather hook knows WHICH partition dir it just wrote.
+            # Over a VALUES row (a LocalRelation) ConvertToLocalRelation
+            # folds the casts on the driver: no job, unlike the
+            # one-task job a FROM-less SELECT costs.
             row = self.spark.sql(
                 "SELECT "
                 + ", ".join(
                     f"CAST({static[p]} AS {fields[p].simpleString()})"
                     for p in parts
                 )
+                + " FROM VALUES (0)"
             ).first()
             if overwrite:
                 static_values = [tuple(row)]
@@ -8614,7 +8630,7 @@ class Engine:
                 "hive.materialize.max.rows, or pass eager=False and keep "
                 "the result distributed"
             )
-        return self.spark.createDataFrame(rows, df.schema)
+        return local_frame(self.spark, rows, df.schema)
 
     _NOAS_TRANSFORM_SUBQ = re.compile(
         r"\(\s*FROM\s+([\w.]+)\s+SELECT\s+TRANSFORM\s*\(",
@@ -8980,7 +8996,7 @@ class Engine:
                 raise ValueError(
                     f"no .avro files and no declared schema for {key!r}"
                 )
-            df = self.spark.createDataFrame([], schema)
+            df = local_frame(self.spark, [], schema)
         if key in self.table_schemas:
             df = self._apply_char_read_semantics(
                 df, self.table_schemas[key]
@@ -9135,7 +9151,7 @@ class Engine:
                 template = self.tables[src_key].schema
             else:
                 template = self.spark.table(like_src).schema
-            df = self.spark.createDataFrame([], template)
+            df = local_frame(self.spark, [], template)
         else:
             from pyspark.sql.types import StructField, StructType
 
@@ -9143,7 +9159,7 @@ class Engine:
                 StructField(n, t, True)
                 for n, t in self._parse_col_defs(coldefs)
             ]
-            df = self.spark.createDataFrame([], StructType(fields))
+            df = local_frame(self.spark, [], StructType(fields))
         # Shadow snapshot: Hive's session metastore resolves temp tables
         # FIRST, hiding a same-named permanent table until DROP
         # (temp_table.q's `create temporary table s as select * from s`;
@@ -9308,8 +9324,8 @@ class Engine:
             "input_tables": sorted(f"default@{k}" for k in tables),
             "input_partitions": sorted(partitions),
         }
-        return self.spark.createDataFrame(
-            [(_json.dumps(payload),)], "explain_dependency string"
+        return local_frame(
+            self.spark, [(_json.dumps(payload),)], "explain_dependency string"
         )
 
     def sql_async(self, query: str):

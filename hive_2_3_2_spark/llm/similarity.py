@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from hive_2_3_2_spark.session import local_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -715,8 +717,10 @@ def pq_topk(
     # one (nq, m, n_codes) tensor in every executor via UDF closure
     LUTS = np.stack(luts)
     spark = codes.sparkSession
-    q_idx = spark.createDataFrame(
-        [(i, r.query_id) for i, r in enumerate(q_rows)], "qidx int, query_id long"
+    q_idx = local_frame(
+        spark,
+        [(i, r.query_id) for i, r in enumerate(q_rows)],
+        "qidx int, query_id long",
     )
 
     @pandas_udf("double")
@@ -885,8 +889,8 @@ def ivfpq_topk_prebuilt(
             probed.append((i, int(r.query_id), int(cell), float(C[cell] @ qv)))
     LUTS = np.stack(luts)
 
-    q_probed = spark.createDataFrame(
-        probed, "qidx int, query_id long, cell int, base double"
+    q_probed = local_frame(
+        spark, probed, "qidx int, query_id long, cell int, base double"
     )
 
     @pandas_udf("double")

@@ -25,10 +25,21 @@ Scale posture: every config below is chosen for a multi-executor cluster at
 
 from __future__ import annotations
 
+import decimal
+import math
 import os
 import tempfile
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.errors import PySparkTypeError
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StringType,
+    StructType,
+)
 
 _SCRATCH_BASE = os.environ.get("SPARK_GRAFT_SCRATCH") or os.path.join(
     tempfile.gettempdir(), "hive_2_3_2_spark_scratch"
@@ -133,3 +144,128 @@ def get_spark(
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# Parsed DDL schemas, keyed by their text: the engine builds its local
+# results under a few dozen fixed schemas, and each parse is a py4j call.
+_DDL_SCHEMAS: dict[str, StructType] = {}
+
+
+def _java_str(v: Any) -> str:
+    """``String.valueOf`` of the Java object a Python scalar pickles to:
+    ``createDataFrame(list)`` accepts any value in a string column and
+    the JVM stores its ``toString`` (``EvaluatePython.makeFromJava``)."""
+    if isinstance(v, str):
+        return v
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, (int, decimal.Decimal)):
+        return str(v)  # BigDecimal.toString == Decimal.__str__
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "NaN"
+        if math.isinf(v):
+            return "Infinity" if v > 0 else "-Infinity"
+        if v == 0 or 1e-3 <= abs(v) < 1e7:
+            return repr(v)
+        # Double.toString's computerized scientific notation: the same
+        # shortest digits as repr, as d.ddd...E<exp>
+        sign, digits, exp = decimal.Decimal(repr(v)).as_tuple()
+        ds = "".join(map(str, digits)).rstrip("0") or "0"
+        mant = ds[0] + "." + (ds[1:] or "0")
+        return f"{'-' if sign else ''}{mant}E{exp + len(digits) - 1}"
+    raise PySparkTypeError(
+        errorClass="CANNOT_ACCEPT_OBJECT_IN_TYPE",
+        messageParameters={
+            "data_type": "StringType()",
+            "obj_name": repr(v),
+            "obj_type": type(v).__name__,
+        },
+    )
+
+
+def _string_coercer(dt: DataType) -> Callable[[Any], Any] | None:
+    """Applies ``_java_str`` to every string leaf of an internal value of
+    type ``dt``; None when ``dt`` holds no string."""
+    if isinstance(dt, StringType):
+        return lambda v: None if v is None else _java_str(v)
+    if isinstance(dt, ArrayType):
+        elem = _string_coercer(dt.elementType)
+        return elem and (
+            lambda v: None if v is None else [elem(x) for x in v]
+        )
+    if isinstance(dt, MapType):
+        key, val = _string_coercer(dt.keyType), _string_coercer(dt.valueType)
+        if key is None and val is None:
+            return None
+        key, val = key or (lambda k: k), val or (lambda x: x)
+        return (
+            lambda v: None if v is None
+            else {key(k): val(x) for k, x in v.items()}
+        )
+    if isinstance(dt, StructType):
+        fields = [_string_coercer(f.dataType) for f in dt.fields]
+        if not any(fields):
+            return None
+        return lambda v: None if v is None else tuple(
+            f(x) if f else x for f, x in zip(fields, v)
+        )
+    return None
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Any],
+    schema: str | StructType,
+) -> DataFrame:
+    """A DataFrame over rows the driver already holds, as a JVM
+    LocalRelation: collecting it launches no Spark job.
+
+    In classic PySpark, ``spark.createDataFrame(<python list>)`` is
+    ``sc.parallelize`` plus a Python-worker RDD
+    (``pyspark/sql/session.py`` ``_createFromLocal``), so every SET,
+    DESCRIBE, SHOW or ``rows_affected`` result built that way cost one
+    job with a task per core when collected (about 0.3 s on ``local[4]``).
+    A ``pyarrow.Table`` input instead ships the rows to the JVM in one
+    Arrow stream and becomes a ``LocalTableScan``, which Catalyst can
+    also fold (ConvertToLocalRelation, PropagateEmptyRelation).
+
+    ``schema`` is a DDL string or a ``StructType`` and is required: the
+    rows are never inferred. Every row is checked against it with the
+    same verifier ``createDataFrame(list)`` applies (``verifySchema``),
+    so a value that does not fit its declared type raises the same
+    typed ``PySparkTypeError``/``PySparkValueError``. The values are then
+    converted exactly as the list path converts them
+    (``StructType.toInternal``: dates as epoch days, timestamps as UTC
+    microseconds, naive datetimes read in the process's local zone; a
+    number or boolean in a string column becomes its Java ``toString``),
+    so both paths yield identical rows. Outside the suite's fixtures,
+    this is the package's only path from Python rows to a DataFrame.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _create_converter, _make_type_verifier
+
+    if isinstance(schema, str):
+        struct = _DDL_SCHEMAS.get(schema)
+        if struct is None:
+            struct = _DDL_SCHEMAS[schema] = spark._parse_ddl(schema)
+    else:
+        struct = schema
+    verify = _make_type_verifier(struct)
+    convert = _create_converter(struct)
+    stringify = _string_coercer(struct) or (lambda row: row)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(stringify(struct.toInternal(convert(row))))
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*internal)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(col, type=field.type)
+            for col, field in zip(columns, arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

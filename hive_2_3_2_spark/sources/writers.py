@@ -10,6 +10,13 @@ Spark-first: df.write.partitionBy/bucketBy; dynamic partition overwrite
 semantics of replacing only touched partitions); MERGE emulated as
 join + dynamic partition overwrite (documented non-atomic across
 partitions — plain parquet has no transaction log; see SURVEY §7.4).
+
+Everything a write learns on the driver stays there: the touched
+partition tuples pass to ``_staged_rewrite`` as Python tuples, not as a
+DataFrame collected again, and the few frames built from driver-side
+rows (the semi-join fallback above ``_MAX_STATIC_PRUNE`` touched
+partitions, an empty target's relation) are LocalRelations from
+``session.local_frame``, so none of them costs a Spark job.
 """
 
 from __future__ import annotations
@@ -19,6 +26,8 @@ import os
 import pyarrow.parquet as _pq
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from hive_2_3_2_spark.session import local_frame
 
 
 # Above this many files the per-file footer read leaves the driver:
@@ -258,9 +267,6 @@ def merge_upsert(
         ]
         if not values:
             return
-        touched = spark.createDataFrame(
-            values, target.select(*partition_cols).schema
-        )
         pred = _partition_filter(partition_cols, values)
         if pred is not None:
             target = target.filter(pred)
@@ -291,8 +297,9 @@ def merge_upsert(
     merged = merged.drop("__matched")
 
     if partition_cols:
-        merged = merged.join(F.broadcast(touched), partition_cols, "left_semi")
-        _staged_rewrite(spark, target_path, merged, partition_cols, touched)
+        if pred is None:
+            merged = _semi_join_touched(spark, merged, partition_cols, values)
+        _staged_rewrite(spark, target_path, merged, partition_cols, values)
     else:
         _staged_rewrite(spark, target_path, merged, None, None)
 
@@ -363,7 +370,7 @@ def _staged_rewrite(
     target_path: str,
     df: DataFrame,
     partition_cols: list[str] | None,
-    touched: DataFrame | None,
+    touched: list[tuple] | None,
     partition_counts: dict | None = None,
     fmt: str = "parquet",
     written_rels: set | None = None,
@@ -381,9 +388,9 @@ def _staged_rewrite(
     only the TOUCHED partition directories — a touched partition whose
     staged result is empty (all rows deleted) is removed outright,
     which dynamic partition overwrite cannot express (no staged files →
-    nothing to overwrite the stale dir with). ``touched`` must list the
-    distinct partition tuples being rewritten (small: metadata-sized
-    collect, not data)."""
+    nothing to overwrite the stale dir with). ``touched`` lists the
+    distinct partition-value tuples being rewritten; the callers already
+    hold them on the driver, so deriving the swap set costs no job."""
     import shutil
 
     staging = _staging_dir(target_path)
@@ -400,10 +407,7 @@ def _staged_rewrite(
             # the new partition content, so staging's dirs are exact).
             rels = set(_staged_partition_rels(staging, len(partition_cols)))
         else:
-            rels = {
-                _partition_rel_dir(partition_cols, tuple(r))
-                for r in touched.collect()
-            }
+            rels = {_partition_rel_dir(partition_cols, t) for t in touched}
         for rel in sorted(rels):
             tgt_dir = os.path.join(target_path, rel)
             stg_dir = os.path.join(staging, rel)
@@ -452,19 +456,32 @@ def _partition_filter(
     return pred
 
 
+def _semi_join_touched(
+    spark, df: DataFrame, partition_cols: list[str], values: list[tuple]
+) -> DataFrame:
+    """``df`` restricted to the touched partitions by a broadcast semi
+    join over a local frame of their tuples — the fallback for more
+    than ``_MAX_STATIC_PRUNE`` tuples, where ``_partition_filter``
+    declines to compile a predicate. Null-safe, as that predicate is: a
+    NULL tuple value names the __HIVE_DEFAULT_PARTITION__ directory,
+    whose rows a plain equi-join would drop from the rewrite."""
+    touched = local_frame(spark, values, df.select(*partition_cols).schema)
+    cond = [df[c].eqNullSafe(touched[c]) for c in partition_cols]
+    return df.join(F.broadcast(touched), cond, "left_semi")
+
+
 def _touched_partitions(
-    spark, target: DataFrame, hit: Column, partition_cols: list[str]
-) -> tuple[int, DataFrame | None, list[tuple]]:
-    """ONE discovery job: (affected row count, touched-partitions DF,
-    touched partition-value tuples).
+    target: DataFrame, hit: Column, partition_cols: list[str]
+) -> tuple[int, list[tuple]]:
+    """ONE discovery job: (affected row count, touched partition-value
+    tuples).
 
     Replaces the r2 pattern of a pre-count scan PLUS a separate
     touched-distinct scan (judge finding: the DML front-end read the
     target twice before the rewrite read it again). The grouped count
-    yields both answers in a single pass; the returned DF is a local
-    relation (metadata-sized), so downstream semi-joins broadcast it and
-    ``_staged_rewrite``'s collect is free; the raw tuples feed
-    ``_partition_filter`` so the rewrite scan statically prunes."""
+    yields both answers in a single pass; the tuples feed
+    ``_partition_filter`` so the rewrite scan statically prunes, and
+    ``_staged_rewrite`` takes them as its swap set."""
     stats = (
         target.filter(hit)
         .groupBy(*partition_cols)
@@ -472,13 +489,7 @@ def _touched_partitions(
         .collect()
     )
     affected = int(sum(r["__n"] for r in stats))
-    if not stats:
-        return 0, None, []
-    values = [tuple(r[c] for c in partition_cols) for r in stats]
-    touched = spark.createDataFrame(
-        values, target.select(*partition_cols).schema
-    )
-    return affected, touched, values
+    return affected, [tuple(r[c] for c in partition_cols) for r in stats]
 
 
 def _read_target(spark, target_path: str, schema=None) -> DataFrame:
@@ -497,7 +508,7 @@ def _read_target(spark, target_path: str, schema=None) -> DataFrame:
     except Exception as exc:
         if schema is None or "UNABLE_TO_INFER_SCHEMA" not in str(exc):
             raise
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
 
 def delete_where(
@@ -529,10 +540,10 @@ def delete_where(
     )
     survivors = target.filter(~F.coalesce(condition, F.lit(False)))
     if partition_cols:
-        affected, touched, values = _touched_partitions(
-            spark, target, F.coalesce(condition, F.lit(False)), partition_cols
+        affected, values = _touched_partitions(
+            target, F.coalesce(condition, F.lit(False)), partition_cols
         )
-        if touched is None:
+        if not values:
             return 0
         pred = _partition_filter(partition_cols, values)
         if pred is not None:
@@ -542,10 +553,10 @@ def delete_where(
                 ~F.coalesce(condition, F.lit(False))
             )
         else:
-            survivors = survivors.join(
-                F.broadcast(touched), partition_cols, "left_semi"
+            survivors = _semi_join_touched(
+                spark, survivors, partition_cols, values
             )
-        _staged_rewrite(spark, target_path, survivors, partition_cols, touched)
+        _staged_rewrite(spark, target_path, survivors, partition_cols, values)
         return affected
     before = parquet_row_count(target_path)
     _staged_rewrite(spark, target_path, survivors, None, None)
@@ -610,19 +621,17 @@ def update_where(
         ]
     )
     if partition_cols:
-        affected, touched, values = _touched_partitions(
-            spark, target, hit, partition_cols
-        )
-        if touched is None:
+        affected, values = _touched_partitions(target, hit, partition_cols)
+        if not values:
             return 0
         pred = _partition_filter(partition_cols, values)
         if pred is not None:
             updated = updated.filter(pred)  # static scan pruning
         else:
-            updated = updated.join(
-                F.broadcast(touched), partition_cols, "left_semi"
+            updated = _semi_join_touched(
+                spark, updated, partition_cols, values
             )
-        _staged_rewrite(spark, target_path, updated, partition_cols, touched)
+        _staged_rewrite(spark, target_path, updated, partition_cols, values)
         return affected
     _staged_rewrite(spark, target_path, updated, None, None)
     if pre_counted is not None:
@@ -804,14 +813,9 @@ def insert_rows(
         # the target partition regardless (an empty staging listing
         # alone would leave it intact). Dynamic overwrite keeps the
         # staged-listing-derived swap set (touched=None).
-        touched = None
-        if static_partition_values and partition_cols:
-            touched = spark.createDataFrame(
-                static_partition_values,
-                df.select(*partition_cols).schema,
-            )
         _staged_rewrite(
-            spark, target_path, df, partition_cols or None, touched,
+            spark, target_path, df, partition_cols or None,
+            static_partition_values or None,
             partition_counts=partition_counts,
             fmt=fmt, written_rels=written_rels,
         )
@@ -985,28 +989,29 @@ def merge_apply(
         ]
         if not touched_vals:
             return 0
-        touched = spark.createDataFrame(
-            touched_vals, target.select(*partition_cols).schema
-        )
         # Prune set ⊇ swap set: it must ALSO cover matched-but-unchanged
         # partitions — pruning a partition holding a source row's match
         # would reclassify that row as unmatched and spuriously INSERT it.
         prune_vals = [tuple(r[c] for c in partition_cols) for r in stats]
         pred = _partition_filter(partition_cols, prune_vals)
         if pred is not None:
+            # swap set ⊆ prune set, so its predicate compiles too
             joined2, out2, _ch2, _mt2, keep2 = build(target.filter(pred))
             merged = (
                 joined2.filter(keep2)
                 .select(*out2)
-                .join(F.broadcast(touched), partition_cols, "left_semi")
+                .filter(_partition_filter(partition_cols, touched_vals))
             )
         else:
-            merged = (
-                pre.filter("__keep")
-                .drop("__changed", "__matched", "__keep")
-                .join(F.broadcast(touched), partition_cols, "left_semi")
+            merged = _semi_join_touched(
+                spark,
+                pre.filter("__keep").drop("__changed", "__matched", "__keep"),
+                partition_cols,
+                touched_vals,
             )
-        _staged_rewrite(spark, target_path, merged, partition_cols, touched)
+        _staged_rewrite(
+            spark, target_path, merged, partition_cols, touched_vals
+        )
         return affected
 
     joined, out, changed, _matched, keep = build(target)

@@ -299,4 +299,13 @@ def pytest_cmdline_main(config):
         f"{skipped} skipped across {len(shards)} shards in {wall:.1f}s"
         + (f" — FAILING shards: {bad}" if bad else " — all shards green")
     )
-    return max(rcs.values()) if rcs else 1
+    return _shards_exit_code(rcs, [i for i, *_ in procs])
+
+
+def _shards_exit_code(rcs: dict[int, int], shard_ids) -> int:
+    """0 only when EVERY shard reported rc 0, else 1. A worker killed
+    by a signal reports a negative rc (``max`` over the rcs would call
+    that green), and a shard with no reported rc never finished."""
+    shard_ids = list(shard_ids)
+    ok = bool(shard_ids) and all(rcs.get(i) == 0 for i in shard_ids)
+    return 0 if ok else 1

@@ -1014,3 +1014,47 @@ def test_create_temporary_table_hive_form(spark):
     eng.sql("CREATE TEMPORARY TABLE IF NOT EXISTS tt_ctas (x INT)")  # no-op
     eng.sql("DROP TABLE tt_ctas")
     eng.sql("DROP TABLE tt_decl")
+
+
+@pytest.mark.parametrize(
+    "max_prune", [1000, 0], ids=["static_prune", "semi_join_fallback"]
+)
+def test_dml_on_default_partition_keeps_its_other_rows(
+    spark, tmp_path, monkeypatch, max_prune
+):
+    """MERGE / UPDATE / DELETE touching the NULL partition
+    (__HIVE_DEFAULT_PARTITION__) rewrite it with its untouched rows
+    intact — on the static-prune path and on the semi-join fallback
+    above _MAX_STATIC_PRUNE touched partitions. A plain equi-join with
+    the touched tuples drops NULL-partition rows, and the swap then
+    replaced the whole partition with nothing."""
+    from hive_2_3_2_spark.sources import writers
+
+    monkeypatch.setattr(writers, "_MAX_STATIC_PRUNE", max_prune)
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, "a", "x"), (2, "b", None), (3, "c", None), (4, "d", None)],
+        "k int, v string, p string",
+    ).write.partitionBy("p").parquet(path)
+    eng = Engine(spark=spark)
+    eng.register_table("t", path, ["p"])
+
+    def rows():
+        return sorted(
+            (tuple(r) for r in eng.sql("SELECT k, v, p FROM t").collect()),
+            key=lambda r: r[0],
+        )
+
+    res = eng.sql(
+        "MERGE INTO t USING (SELECT 2 AS k, 'B' AS v) s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v"
+    ).collect()
+    assert res[0].rows_affected == 1
+    assert rows() == [
+        (1, "a", "x"), (2, "B", None), (3, "c", None), (4, "d", None)
+    ]
+    res = eng.sql("UPDATE t SET v = 'C' WHERE k = 3").collect()
+    assert res[0].rows_affected == 1
+    res = eng.sql("DELETE FROM t WHERE k = 4").collect()
+    assert res[0].rows_affected == 1
+    assert rows() == [(1, "a", "x"), (2, "B", None), (3, "C", None)]
