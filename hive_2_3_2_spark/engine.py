@@ -763,7 +763,8 @@ _EXPLAIN_ANALYZE_STMT = re.compile(
 # ListResourceProcessor / DeleteResourceProcessor, RESET →
 # ResetProcessor, SOURCE → CliDriver.processFile, dfs → DfsProcessor,
 # ! → shell escape (CliDriver.processCmd).
-_SET_STMT = re.compile(r"^\s*SET(?:\s+(.*?))?\s*;?\s*$",
+# (``SET (`` is not SetProcessor's: it falls through to Spark's parser)
+_SET_STMT = re.compile(r"^\s*SET(?!\s*\()(?:\s+(.*?))?\s*;?\s*$",
                        re.IGNORECASE | re.DOTALL)
 _RESET_STMT = re.compile(r"^\s*RESET\s*;?\s*$", re.IGNORECASE)
 _RESOURCE_STMT = re.compile(
@@ -820,13 +821,10 @@ _DESCRIBE_FUNCTION_STMT = re.compile(
 _SHOW_CONF_STMT = re.compile(
     r"^\s*SHOW\s+CONF\s+'([^']+)'\s*;?\s*$", re.IGNORECASE
 )
-_SHOW_LOCKS_STMT = re.compile(
-    r"^\s*SHOW\s+LOCKS(?:\s+(?:DATABASE\s+)?[\w.]+)?"
-    r"(?:\s+EXTENDED)?\s*;?\s*$",
+_SHOW_ACID_STMT = re.compile(
+    r"^\s*SHOW\s+(?:(LOCKS)(?:\s+(?:DATABASE\s+)?[\w.]+)?(?:\s+EXTENDED)?"
+    r"|(TRANSACTIONS|COMPACTIONS))\s*;?\s*$",
     re.IGNORECASE,
-)
-_SHOW_TXN_COMPACT_STMT = re.compile(
-    r"^\s*SHOW\s+(TRANSACTIONS|COMPACTIONS)\s*;?\s*$", re.IGNORECASE
 )
 # Database DDL (reference: parse/DDLSemanticAnalyzer.java
 # analyzeCreateDatabase / analyzeDropDatabase / analyzeAlterDatabase →
@@ -1672,138 +1670,160 @@ class Engine:
         CONCATENATE) keep the typed error."""
         return name.split(".")[-1].lower() in self.table_paths
 
+    def _local_sink(self, name: str) -> bool:
+        """The INSERT sink rule, shared by the single-INSERT and the
+        multi-insert routes: Engine-registered tables, or session-catalog
+        tables that are not views (which need the Hive positional-cast
+        mapping — Spark's native INSERT enforces ANSI store assignment
+        and rejects e.g. string→int, join8.q)."""
+        return self._dml_registered(name) or (
+            name.split(".")[-1].lower() not in self.views
+            and self._is_catalog_table(name)
+        )
+
+    def _run_insert_sink(self, m: re.Match[str]) -> DataFrame:
+        """An INSERT into a _local_sink: registered tables take the
+        staged rewrite, catalog tables Hive's positional-cast mapping."""
+        if self._dml_registered(m.group(2)):
+            return self._run_insert(m)
+        return self._run_insert_catalog(m)
+
+    def _local_sinks(self, inserts: str) -> bool:
+        """Every table sink of a multi-insert is a _local_sink. DIRECTORY
+        branches are always engine-handled sinks (ppd_multi_insert.q
+        mixes table + directory sinks), so they don't participate in the
+        table-sink routing check."""
+        targets = [
+            t
+            for t in re.findall(
+                r"INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?"
+                r"(?:LOCAL\s+)?([\w.]+)",
+                inserts,
+                re.IGNORECASE,
+            )
+            if t.upper() != "DIRECTORY"
+        ]
+        return bool(targets) and all(self._local_sink(t) for t in targets)
+
     def _rows_affected(self, n: int) -> DataFrame:
         return local_frame(self.spark, [(n,)], "rows_affected bigint")
 
     def _semantic_rewrites(self, query: str) -> str:
-        """The value-semantics pre-dispatch rewrites. EVERY path that
-        evaluates HiveQL — a standalone statement through sql(), or a
-        SELECT body lifted out of CREATE ... AS / CREATE TEMPORARY
-        TABLE ... AS (_body_df) — must pass through here, so the same
-        SELECT cannot yield different values inside a CTAS than when
-        run standalone. These model Hive RUNTIME semantics (type
-        coercion, lenient date parses, GROUP BY constant mode), not
-        statement syntax, so they compose safely with body fragments."""
-        if (
-            self.hiveconf.get(
-                # Reference DEFAULT is false (HiveConf.java:1337):
-                # integral/boolean → TIMESTAMP counts MILLISECONDS.
-                "hive.int.timestamp.conversion.in.seconds", "false"
-            ).lower() == "false"
-            and re.search(r"\btimestamp\b", query, re.IGNORECASE)
-        ):
-            query = _rewrite_int_ts_casts(query)
-        if re.search(
-            r"\b(?:GROUP|ORDER|SORT)\s+BY\b", query, re.IGNORECASE
-        ) and re.search(r"(?<![\w.'\"`])\d", query):
-            # Position-alias semantics, PER ITEM (SemanticAnalyzer
-            # processPositionAlias, SemanticAnalyzer.java:12743-12846):
-            # a bare integer in GROUP BY is a CONSTANT unless
-            # hive.groupby.position.alias (default false,
-            # HiveConf.java:1154) or the deprecated combined conf is
-            # true — `select count(1) from t group by 1` is one global
-            # bucket (constGby.q), and `select key, count(*) ...
-            # group by 1` ERRORS (key not grouped), which Spark's
-            # MISSING_AGGREGATION reproduces once the literal stops
-            # being an ordinal; with the alias ON, Spark's own
-            # groupByOrdinal IS Hive's behavior (groupby_position.q).
-            # ORDER BY defaults to ORDINALS
-            # (hive.orderby.position.alias default TRUE,
-            # HiveConf.java:1156 — Spark's orderByOrdinal matches), so
-            # constants only when the user turns it off. SORT BY is
-            # never position-processed in Hive: always constants.
-            combined = self.hiveconf.get(
-                "hive.groupby.orderby.position.alias", "false"
-            ).lower() == "true"
-            gby_pos = combined or self.hiveconf.get(
-                "hive.groupby.position.alias", "false"
-            ).lower() == "true"
-            oby_pos = combined or self.hiveconf.get(
-                "hive.orderby.position.alias", "true"
-            ).lower() == "true"
-            query = _rewrite_positional_constants(
-                query,
-                gby_constants=not gby_pos,
-                oby_constants=not oby_pos,
-                sortby_constants=True,
-            ) or query
-        if self._COMPUTE_STATS_CALL.search(query):
-            # the internal stats UDAF's direct spelling → native
-            # aggregate struct composition (type-dispatched)
-            query = self._rewrite_compute_stats(query)
-        if _search_code(self._HIVE_HASH_CALL, query) is not None:
-            # Hive's hash() is the getBucketHashCode 31-fold, NOT
-            # Spark's Murmur3 — schema-resolved typed rewrite
-            query = self._rewrite_hive_hash(query)
-        if re.search(r"(?is)\bas\s+boolean\s*\)", query):
-            # Hive's getBoolean conversions (string non-empty,
-            # numeric (int)-truncated) — schema-resolved
-            query = self._rewrite_boolean_casts(query)
-        if re.search(r"(?is)\bin\s*\(\s*select\b", query):
-            # string IN (numeric subquery) compares at DOUBLE in Hive
-            query = self._rewrite_string_in_numeric_subquery(query)
-        if re.search(r"(?is)\babs\s*\(", query):
-            # GenericUDFAbs evaluates BYTE/SHORT at INT width
-            # (GenericUDFAbs.java:80-86: abs(tinyint -128) is 128,
-            # where Spark wraps at the byte width to -128)
-            query = self._rewrite_abs_promote(query)
-        if re.search(r"\badd_months\s*\(", query, re.IGNORECASE):
-            # Hive's lenient string parse for add_months (rollover) —
-            # must precede the months_between rewrite, which emits
-            # internal add_months calls of its own
-            query = self._rewrite_add_months_typed(query)
-        if re.search(r"\bmonths_between\s*\(", query, re.IGNORECASE):
-            # Hive's lenient string parse for months_between operands
-            # (rollover + partial-time skip) — real golden divergences
-            query = self._rewrite_months_between_typed(query)
-        if re.search(r"\bAS\s+FLOAT\s*\)", query, re.IGNORECASE):
-            # decimal-vs-float-literal comparisons compare at FLOAT in
-            # Hive (parquet_ppd_decimal.q) — typeof-dispatched rewrite
-            query = _rewrite_float_cast_compares(query)
-        if re.search(r"\bIN\s*\(\s*'-?\d", query, re.IGNORECASE):
-            # decimal IN ('quoted numerics') — Hive's numeric IN route
-            query = _rewrite_decimal_in_strings(query)
-        if re.search(r"[=<>]", query):
-            # decimal COLUMN vs float COLUMN comparisons happen at
-            # FLOAT in Hive — schema-resolved static rewrite
-            query = self._rewrite_decimal_float_col_compares(query)
-        if any(
-            int(m.group(1)) < 1583
-            for m in re.finditer(
-                r"\btimestamp\s+'(\d{1,4})-", query, re.IGNORECASE
+        """The value-semantics passes (_SEMANTIC_STEPS) on their own.
+        Engine.sql runs the same rows once per statement inside
+        _SQL_STEPS, so a SELECT body a handler later lifts out of a
+        CTAS or a view already carries them."""
+        return self._apply_steps(query, _SEMANTIC_STEPS)
+
+    def _rewrite_position_aliases(self, query: str) -> str:
+        """Position-alias semantics, PER ITEM (SemanticAnalyzer
+        processPositionAlias, SemanticAnalyzer.java:12743-12846): a bare
+        integer in GROUP BY is a CONSTANT unless
+        hive.groupby.position.alias (default false, HiveConf.java:1154)
+        or the deprecated combined conf is true — `select count(1) from
+        t group by 1` is one global bucket (constGby.q), and `select
+        key, count(*) ... group by 1` ERRORS (key not grouped), which
+        Spark's MISSING_AGGREGATION reproduces once the literal stops
+        being an ordinal; with the alias ON, Spark's own groupByOrdinal
+        IS Hive's behavior (groupby_position.q). ORDER BY defaults to
+        ORDINALS (hive.orderby.position.alias default TRUE,
+        HiveConf.java:1156 — Spark's orderByOrdinal matches), so
+        constants only when the user turns it off. SORT BY is never
+        position-processed in Hive: always constants."""
+        combined = self.hiveconf.get(
+            "hive.groupby.orderby.position.alias", "false"
+        ).lower() == "true"
+        gby_pos = combined or self.hiveconf.get(
+            "hive.groupby.position.alias", "false"
+        ).lower() == "true"
+        oby_pos = combined or self.hiveconf.get(
+            "hive.orderby.position.alias", "true"
+        ).lower() == "true"
+        return _rewrite_positional_constants(
+            query,
+            gby_constants=not gby_pos,
+            oby_constants=not oby_pos,
+            sortby_constants=True,
+        ) or query
+
+    def _rewrite_function_aliases(self, query: str) -> str:
+        """PTFs registered under user names (ptf_register_tblfn.q:
+        CREATE TEMPORARY FUNCTION x AS '...MatchPath$MatchPathResolver')
+        normalize to their canonical head before the PTF rewrites;
+        Hive-builtin-class registrations invoke the Spark builtin."""
+        for alias, canon in self.ptf_aliases.items():
+            pat = re.compile(
+                rf"\b{re.escape(alias)}(\s*\(\s*on\b)", re.IGNORECASE
             )
-        ):
-            # pre-Gregorian timestamp filters must not reach the ORC
-            # SearchArgument (hybrid-calendar stripe elimination)
-            query = _rewrite_ancient_ts_filters(query)
+            if _search_code(pat, query):
+                query = pat.sub(rf"{canon}\1", query)
+        for alias, fn in self.fn_aliases.items():
+            pat = re.compile(rf"\b{re.escape(alias)}\s*\(", re.IGNORECASE)
+            if _search_code(pat, query):
+                query = pat.sub(f"{fn}(", query)
+        return query
+
+    def _rewrite_udtf_select(self, query: str) -> str:
+        """Hive's SELECT-head UDTF spelling ``SELECT f() FROM t``
+        (SemanticAnalyzer genSelectPlan UDTF branch) → Spark's
+        TABLE-argument invocation; SINGLE PARTITION reproduces the
+        single fetch/reduce task the golden runs under
+        (udtf_nofetchtask.q). Argless only — UDTFs with per-row args use
+        LATERAL VIEW, which Spark plans natively."""
+        for uname in self.python_udtfs:
+            um = re.match(
+                rf"^\s*select\s+{re.escape(uname)}\s*\(\s*\)\s+"
+                rf"from\s+(.+?)\s*;?\s*$",
+                query,
+                re.IGNORECASE | re.DOTALL,
+            )
+            if um:
+                return (
+                    f"SELECT * FROM {uname}(TABLE(SELECT * FROM "
+                    f"{um.group(1)}) WITH SINGLE PARTITION)"
+                )
         return query
 
     def _body_df(self, body: str) -> DataFrame:
-        """Evaluate a SELECT body extracted from a larger statement
-        (CTAS, CREATE TEMPORARY TABLE ... AS, avro-fallback CTAS) with
-        the SAME pre-dispatch semantic rewrites Engine.sql applies to a
-        standalone SELECT."""
-        body = self._semantic_rewrites(self._expand_macros(body))
+        """Evaluate a SELECT body extracted from a larger statement (CTAS,
+        CREATE TEMPORARY TABLE ... AS, a view body, INSERT DIRECTORY,
+        EXPLAIN DEPENDENCY). Engine.sql has already applied macro
+        expansion and the semantic passes to the whole statement before
+        any handler runs, so only the final text rewrite is left: the
+        same SELECT yields the same values inside DDL as standalone."""
         return self.spark.sql(rewrite_hiveql(body, spark=self.spark))
+
+    def _apply_steps(self, query: str, steps) -> str | DataFrame:
+        """Run ``query`` down an ordered step table (see _SQL_STEPS):
+        return the first route's DataFrame, or the text the passes
+        left when no route answered."""
+        for test, step in steps:
+            if isinstance(test, re.Pattern):
+                m = test.match(query)
+            else:
+                m = test(self, query)
+            if not m:
+                continue
+            out = step(self, query, m)
+            if isinstance(out, str):
+                query = out
+            elif out is not None:
+                return out
+        return query
 
     def sql(self, query: str) -> DataFrame:
         """Run HiveQL-compatible SQL (reference entry:
         ql/src/java/org/apache/hadoop/hive/ql/Driver.java:1371 ``run``).
-        SELECT/DQL passes through (plus the HiveQL rewrites); DELETE,
-        UPDATE, INSERT INTO/OVERWRITE, and single-clause MERGE route to
-        the staged-rewrite DML helpers and return a 1-row
-        (rows_affected) DataFrame like a CLI row count. Each statement
-        reads its target once (plus the pruned rewrite) — the affected
-        count comes from the rewrite itself (observed metric, footer
-        row counts, or the shared discovery job), never a pre-scan.
+        DML returns a 1-row (rows_affected) DataFrame like a CLI row
+        count; results the driver computes itself (SET, DESCRIBE, SHOW,
+        EXPLAIN, rows_affected) are LocalRelations that launch no job.
 
-        Results the driver computes itself — SET, DESCRIBE, SHOW, EXPLAIN
-        and the like, and every DML ``rows_affected`` row — are JVM
-        LocalRelations built by ``session.local_frame``: collecting one
-        launches no Spark job, as Hive's CLI answers them without a
-        task."""
-        from pyspark.sql import functions as F
-
+        Dispatch is one ordered step table, ``_SQL_STEPS``: a step
+        rewrites the statement (a pass), answers it (a route) or
+        declines. The first route that answers wins, and each pass sees
+        the text left by the passes above it. A statement no route
+        answers gets ``rewrite_hiveql`` and runs on spark.sql under the
+        error-keyed retry loop."""
         # CLI command processors run BEFORE variable substitution would
         # make sense for SET itself, but Hive substitutes every command
         # (VariableSubstitution wraps each processor) — so substitute
@@ -1823,567 +1843,10 @@ class Engine:
             from hive_2_3_2_spark.catalog import _VIEWS_REGISTERED
 
             _VIEWS_REGISTERED.pop(self.spark.sparkContext.applicationId, None)
-        if "`" in query and self.hiveconf.get(
-            "hive.support.quoted.identifiers", "column"
-        ).lower() != "none":
-            # special-character table names; regex-column mode
-            # (quoted.identifiers=none) keeps its backticked patterns
-            query = _SPECIAL_IDENT.sub(
-                lambda m: _mangle_special_name(m.group(1)), query
-            )
-        if "default" in query.lower():
-            query = self._strip_default_db(query)
-        if self.temp_tables and "." in query:
-            # temp tables SHADOW same-named permanent tables even under
-            # their declared-db qualifier (SessionHiveMetaStoreClient
-            # getTempTable resolves before the metastore;
-            # temp_table_precedence.q) — but Spark resolves db.t against
-            # the catalog, so rewrite the qualified form to the bare
-            # temp-view name.
-            query = self._strip_temp_db_quals(query)
-        if re.search(
-            r"\b(?:PRIMARY|FOREIGN)\s+KEY\b", query, re.IGNORECASE
-        ) and _CREATE_TABLE_PREFIX.match(query):
-            # inline PK/FK constraint items (create_with_constraints.q)
-            # are recorded engine-side and stripped — Spark's CREATE
-            # grammar has no constraint clause
-            query = self._extract_create_constraints(query)
-        query = self._semantic_rewrites(query)
-        # Hive's MAP/REDUCE spellings of script transform normalize to
-        # the TRANSFORM form before ANY dispatch, so the FROM-first
-        # INSERT branch parser and spark.sql both see one spelling.
-        if _search_code(_MAP_REDUCE_KW, query) is not None:
-            query = _rewrite_map_reduce_transform(query)
-        # no-AS TRANSFORM subqueries evaluate eagerly (takes-rest
-        # output contract) and splice back as views, BEFORE the
-        # INSERT/multi-insert dispatch reads the statement
-        if _search_code(self._NOAS_TRANSFORM_SUBQ, query) is not None:
-            query = self._rewrite_noas_transform_subqueries(query)
-        # PTFs registered under user names (ptf_register_tblfn.q:
-        # CREATE TEMPORARY FUNCTION x AS '...MatchPath$MatchPathResolver')
-        # normalize to their canonical head before the PTF rewrites.
-        if self.ptf_aliases:
-            for alias, canon in self.ptf_aliases.items():
-                pat = re.compile(
-                    rf"\b{re.escape(alias)}(\s*\(\s*on\b)", re.IGNORECASE
-                )
-                mm = _search_code(pat, query)
-                if mm:
-                    query = pat.sub(rf"{canon}\1", query)
-        if self.fn_aliases:
-            # Hive-builtin-class registrations invoke the Spark builtin
-            for alias, fn in self.fn_aliases.items():
-                pat = re.compile(
-                    rf"\b{re.escape(alias)}\s*\(", re.IGNORECASE
-                )
-                if _search_code(pat, query):
-                    query = pat.sub(f"{fn}(", query)
-        if self.python_udtfs:
-            # Hive's SELECT-head UDTF spelling ``SELECT f() FROM t``
-            # (SemanticAnalyzer genSelectPlan UDTF branch) → Spark's
-            # TABLE-argument invocation; SINGLE PARTITION reproduces
-            # the single fetch/reduce task the golden runs under
-            # (udtf_nofetchtask.q). Argless only — UDTFs with per-row
-            # args use LATERAL VIEW, which Spark plans natively.
-            for uname in self.python_udtfs:
-                pat = re.compile(
-                    rf"^\s*select\s+{re.escape(uname)}\s*\(\s*\)\s+"
-                    rf"from\s+(.+?)\s*;?\s*$",
-                    re.IGNORECASE | re.DOTALL,
-                )
-                um = pat.match(query)
-                if um:
-                    query = (
-                        f"SELECT * FROM {uname}(TABLE(SELECT * FROM "
-                        f"{um.group(1)}) WITH SINGLE PARTITION)"
-                    )
-                    break
-        # Noop pass-through PTFs reduce to subqueries before ANY
-        # dispatch (they appear in FROM-first multi-insert too).
-        if _search_code(_NOOP_PTF_HEAD, query) is not None:
-            query = self._rewrite_noop_ptf_calls(query)
-        if _CTAS_SPLIT.match(query):
-            query = self._ctas_hive_autonames(query)
-        m = _SHELL_STMT.match(query)
-        if m:
-            raise HiveQLUnsupportedError(
-                "'!' shell escape is not supported — no shell execution "
-                "from SQL in this engine (CliDriver.processCmd shell path)"
-            )
-        m = _DFS_STMT.match(query)
-        if m:
-            raise HiveQLUnsupportedError(
-                "'dfs' commands are not supported — there is no HDFS "
-                "shell here; use LOAD DATA / EXPORT / IMPORT instead"
-            )
-        m = _SET_STMT.match(query)
-        if m and not re.match(r"^\s*SET\s*\(", query):
-            return self._run_set(m.group(1))
-        m = _RESET_STMT.match(query)
-        if m:
-            self.hiveconf.clear()
-            return self._conf_frame([])
-        m = _RESOURCE_STMT.match(query)
-        if m:
-            return self._run_resource(m.group(1), m.group(2), m.group(3))
-        m = _SOURCE_STMT.match(query)
-        if m:
-            return self._run_source(m.group(1))
-        m = _CREATE_MACRO_STMT.match(query)
-        if m:
-            return self._run_create_macro(m)
-        m = _DROP_MACRO_STMT.match(query)
-        if m:
-            self.macros.pop(m.group(1).lower(), None)
-            return self._conf_frame([])
-        m = _CREATE_FUNCTION_STMT.match(query)
-        if m:
-            return self._run_create_function(m)
-        m = _DROP_FUNCTION_STMT.match(query)
-        if m:
-            return self._run_drop_function(m)
-        m = _SHOW_FUNCTIONS_STMT.match(query)
-        if m:
-            return self._run_show_functions(m.group(1))
-        m = _DESCRIBE_FUNCTION_STMT.match(query)
-        if m:
-            return self._run_describe_function(
-                bool(m.group(1)), m.group(2).strip("`")
-            )
-        m = _SHOW_CONF_STMT.match(query)
-        if m:
-            return self._run_show_conf(m.group(1))
-        if _SHOW_LOCKS_STMT.match(query):
-            # DDLTask.showLocks — this engine is single-session with no
-            # lock manager (like Hive under the no-op DummyTxnManager):
-            # the lock list is ALWAYS empty; the typed columns mirror
-            # ShowLocksResponseElement so tooling can still bind.
-            return local_frame(
-                self.spark, [],
-                "lockid string, database string, tab_name string, "
-                "partition string, lock_state string, lock_type string, "
-                "transaction_id string",
-            )
-        m = _SHOW_TXN_COMPACT_STMT.match(query)
-        if m:
-            # ACID manager surfaces (DDLTask.showTxns/showCompactions):
-            # non-transactional engine -> structurally-correct empty
-            # result, matching Hive without ACID enabled.
-            if m.group(1).upper() == "TRANSACTIONS":
-                return local_frame(
-                    self.spark, [],
-                    "txnid bigint, state string, startedtime bigint, "
-                    "lastheartbeattime bigint, user string, host string",
-                )
-            return local_frame(
-                self.spark, [],
-                "compactionid bigint, dbname string, tabname string, "
-                "partname string, type string, state string, "
-                "workerid string, starttime bigint, duration bigint",
-            )
-        m = _CREATE_DB_STMT.match(query)
-        if m:
-            return self._run_create_database(m)
-        m = _ALTER_DB_STMT.match(query)
-        if m:
-            return self._run_alter_database(m)
-        m = _DESC_DB_STMT.match(query)
-        if m:
-            return self._run_describe_database(bool(m.group(1)), m.group(2))
-        m = _SHOW_CREATE_DB_STMT.match(query)
-        if m:
-            return self._run_show_create_database(m.group(1))
-        m = _DROP_DB_STMT.match(query)
-        if m:
-            self.db_props.pop(m.group(2).lower(), None)
-            return self.spark.sql(query.rstrip().rstrip(";"))
-        m = _ALTER_CLUSTERED_STMT.match(query)
-        if m:
-            raise HiveQLUnsupportedError(
-                f"ALTER TABLE {m.group(1)} CLUSTERED BY / NOT "
-                "CLUSTERED: Hive changes bucket metadata for FUTURE "
-                "writes while existing files keep their layout — "
-                "Spark's planner trusts the (immutable) bucket spec "
-                "for shuffle elision, so a drifted spec would return "
-                "wrong joins. CREATE a new table with the target "
-                "CLUSTERED BY and INSERT ... SELECT to migrate"
-            )
-        m = _CREATE_LIKE_STMT.match(query)
-        if m and self._dml_registered(m.group(3)):
-            return self._run_create_like(m)
-        if self.macros:
-            query = self._expand_macros(query)
-        m = _EXPLAIN_ANALYZE_STMT.match(query)
-        if m:
-            return self._run_explain_analyze(m.group(1))
-        m = _EXPLAIN_STMT.match(query)
-        if m:
-            if (m.group(1) or "").upper() == "DEPENDENCY":
-                return self._run_explain_dependency(m.group(2))
-            explained = self._explain_dml(m.group(1), m.group(2))
-            if explained is not None:
-                return explained
-        m = _SHOW_CREATE_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            or m.group(1).split(".")[-1].lower() in self.views
-        ):
-            return self._run_show_create(m.group(1))
-        m = _DESCRIBE_STMT.match(query)
-        if m and self._dml_registered(m.group(2)):
-            if m.group(4):
-                if m.group(3):
-                    raise HiveQLUnsupportedError(
-                        "DESCRIBE <table> PARTITION (...) <column> is "
-                        "not supported — DESCRIBE the partition or the "
-                        "column, not both"
-                    )
-                return self._run_describe_column(m.group(2), m.group(4))
-            if m.group(3):
-                return self._run_describe_partition(
-                    m.group(2), m.group(3), m.group(1)
-                )
-            return self._run_describe(m.group(2), m.group(1))
-        if m and m.group(1) and not m.group(3) and not m.group(4):
-            dkey = m.group(2).split(".")[-1].lower()
-            if dkey in self.table_constraints and (
-                self._is_catalog_table(m.group(2))
-                or self._is_catalog_table(dkey)
-            ):
-                # catalog table with recorded informational constraints
-                # — Spark's DESCRIBE + the Constraints section
-                return self._describe_catalog_with_constraints(
-                    m.group(2), dkey, m.group(1)
-                )
-        m = _DELETE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            from hive_2_3_2_spark.sources.writers import delete_where
-
-            key = self._resolve_dml_table(m.group(1), mutating=True)
-            self._assert_not_mixed(key, "DELETE")
-            cond = F.expr(m.group(2)) if m.group(2) else F.lit(True)
-            path = self.table_paths[key]
-            parts = self.table_partitions.get(key)
-            affected = delete_where(
-                self.spark, path, cond, parts,
-                schema=self._declared_schema(key),
-                target_df=(
-                    self._epoch_union_frame(key, path)
-                    if key in self.schema_epochs else None
-                ),
-            )
-            self.register_table(key, path, parts)
-            return self._rows_affected(affected)
-        m = _UPDATE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            from hive_2_3_2_spark.sources.writers import update_where
-
-            key = self._resolve_dml_table(m.group(1), mutating=True)
-            self._assert_not_mixed(key, "UPDATE")
-            sets = {
-                col: F.expr(expr)
-                for col, expr in _split_assignments(m.group(2))
-            }
-            cond_txt = m.group(3)
-            cond = F.expr(cond_txt) if cond_txt else F.lit(True)
-            path = self.table_paths[key]
-            parts = self.table_partitions.get(key)
-            affected = update_where(
-                self.spark,
-                path,
-                sets,
-                cond,
-                parts,
-                # subquery conditions can't ride the observe metric
-                observe_count=not re.search(
-                    r"\(\s*SELECT\b", cond_txt or "", re.IGNORECASE
-                ),
-                schema=self._declared_schema(key),
-                target_df=(
-                    self._epoch_union_frame(key, path)
-                    if key in self.schema_epochs else None
-                ),
-            )
-            self.register_table(key, path, parts)
-            return self._rows_affected(affected)
-        ine = _INSERT_IF_NOT_EXISTS.match(query)
-        if ine and (
-            self._dml_registered(ine.group(2))
-            or self._is_catalog_table(ine.group(2))
-        ):
-            # Hive's IF NOT EXISTS overwrite guard: when the STATIC
-            # target partition already exists, the insert is a no-op —
-            # the select never runs (insert1_overwrite_partitions.q).
-            if self._static_partition_exists(ine.group(2), ine.group(3)):
-                return self._rows_affected(0)
-            query = query[: ine.end(1)] + query[ine.end(0):]
-        m = _INSERT_STMT.match(query)
-        if m and self._dml_registered(m.group(2)):
-            return self._run_insert(m)
-        if (
-            m
-            and m.group(2).split(".")[-1].lower() not in self.views
-            and self._is_catalog_table(m.group(2))
-        ):
-            # PARTITION specs (static/dynamic/mixed) are handled with
-            # Hive's positional casts + partition-overwrite semantics
-            return self._run_insert_catalog(m)
-        if re.match(r"^\s*WITH\b", query, re.IGNORECASE):
-            # Hive allows the CTE BEFORE the INSERT (WITH c AS (...)
-            # INSERT INTO t SELECT ... FROM c). Split at the top-level
-            # INSERT keyword and fold the CTE prefix into the insert
-            # body, which the SELECT|VALUES|WITH body grammar accepts.
-            ins_pos = next(
-                (
-                    s
-                    for s, _e, w in _scan_top_keywords(query)
-                    if w == "INSERT"
-                ),
-                None,
-            )
-            if ins_pos is not None:
-                cte, rest = query[:ins_pos].rstrip(), query[ins_pos:]
-                im = _INSERT_STMT.match(rest)
-                if im and self._dml_registered(im.group(2)):
-                    folded = (
-                        rest[: im.start(5)] + cte + " " + rest[im.start(5):]
-                    )
-                    return self._run_insert(_INSERT_STMT.match(folded))
-        m = _MULTI_INSERT_STMT.match(query)
-        if m:
-            # DIRECTORY branches are always engine-handled sinks
-            # (ppd_multi_insert.q mixes table + directory sinks), so
-            # they don't participate in the table-sink routing check
-            targets = [
-                t
-                for t in re.findall(
-                    r"INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-                    r"(?:LOCAL\s+)?([\w.]+)",
-                    m.group(2),
-                    re.IGNORECASE,
-                )
-                if t.upper() != "DIRECTORY"
-            ]
-
-            def _local_sink(t: str) -> bool:
-                # Same sink rules as the single-INSERT dispatch above:
-                # Engine-registered tables, or session-catalog tables
-                # (which need the Hive positional-cast mapping — Spark's
-                # native FROM-first INSERT enforces ANSI store
-                # assignment and rejects e.g. string→int, join8.q).
-                return self._dml_registered(t) or (
-                    t.split(".")[-1].lower() not in self.views
-                    and self._is_catalog_table(t)
-                )
-
-            if targets and all(_local_sink(t) for t in targets):
-                return self._run_multi_insert(m.group(1), m.group(2))
-        m = _LOAD_DATA_STMT.match(query)
-        if m and self._dml_registered(m.group(3)):
-            return self._run_load_data(m)
-        m = _MERGE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_merge(m)
-        m = _TRUNCATE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_truncate(m)
-        m = _SHOW_PARTITIONS_STMT.match(query)
-        if m and m.group(1).split(".")[-1].lower() in self.view_partitions:
-            return self._run_show_view_partitions(
-                m.group(1).split(".")[-1].lower()
-            )
-        if m and self._dml_registered(m.group(1)):
-            return self._run_show_partitions(m.group(1), m.group(2))
-        m = _ALTER_PARTITION_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_alter_partition(m)
-        m = _CONCATENATE_STMT.match(query)
-        if m:
-            return self._run_concatenate(m)
-        m = _MSCK_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_msck(m.group(1))
-        m = _REFRESH_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_refresh(m.group(1))
-        m = _ANALYZE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_analyze(m.group(1), m.group(3), m.group(2))
-        m = _RENAME_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_rename(m.group(1), m.group(2))
-        m = _EXCHANGE_PARTITION_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_exchange_partition(m)
-        m = _RENAME_PARTITION_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_rename_partition(m)
-        m = _SET_LOCATION_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_set_location(m.group(1), m.group(2))
-        m = _ALTER_ADD_COLS_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_add_columns(m.group(1), m.group(2))
-        m = _ALTER_REPLACE_COLS_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_replace_columns(m.group(1), m.group(2))
-        m = _ALTER_PART_COLTYPE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_partition_coltype(
-                m.group(1), m.group(2), m.group(3)
-            )
-        m = _ALTER_CHANGE_COL_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_change_column(m)
-        m = _ALTER_TBLPROPS_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_tblproperties(m)
-        m = _ALTER_FILEFORMAT_STMT.match(query)
-        if m:
-            return self._run_set_fileformat(
-                m.group(1), m.group(2), m.group(3)
-            )
-        m = _ALTER_SET_SERDE_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            or self._is_catalog_table(m.group(1))
-        ):
-            return self._run_set_serde(
-                m.group(1), m.group(2), m.group(3), m.group(4)
-            )
-        m = _ALTER_SET_SERDEPROPS_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            or self._is_catalog_table(m.group(1))
-        ):
-            return self._run_set_serde(
-                m.group(1), m.group(2), None, m.group(3)
-            )
-        m = _ALTER_TOUCH_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            or self._is_catalog_table(m.group(1))
-        ):
-            # ALTER TABLE ... TOUCH [PARTITION] (touch.q; DDLTask
-            # touch): fires hooks and bumps timestamps in Hive — a
-            # validated no-op here (the named partition must exist)
-            if m.group(2) and self._dml_registered(m.group(1)):
-                tkey = self._resolve_dml_table(m.group(1))
-                rel = self._static_partition_reldir(tkey, m.group(2))
-                if not os.path.isdir(
-                    os.path.join(self.table_paths[tkey], rel)
-                ):
-                    raise HiveQLUnsupportedError(
-                        f"TOUCH: no such partition {rel!r}"
-                    )
-            return self._rows_affected(0)
-        m = _ALTER_ADD_CONSTRAINT_STMT.match(query)
-        if m:
-            return self._run_add_constraint(m)
-        m = _ALTER_DROP_CONSTRAINT_STMT.match(query)
-        if m:
-            return self._run_drop_constraint(m)
-        m = _SHOW_TABLE_EXTENDED_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            or self._is_catalog_table(m.group(1))
-        ):
-            return self._run_show_table_extended(m.group(1), m.group(2))
-        m = _SHOW_TBLPROPS_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            # catalog tables with engine-side props (SET SERDE /
-            # SERDEPROPERTIES route through the engine because Spark
-            # refuses ALTER SERDE on datasource tables) — serve the
-            # MERGED view so the recorded metadata is observable
-            or m.group(1).split(".")[-1].lower() in self.table_props
-        ):
-            return self._run_show_tblproperties(m.group(1), m.group(2))
-        m = _SHOW_COLUMNS_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_show_columns(m.group(1))
-        m = _CREATE_VIEW_STMT.match(query)
-        if m:
-            return self._run_create_view(m)
-        m = _ALTER_VIEW_PART_STMT.match(query)
-        if m:
-            return self._run_alter_view_partition(m)
-        m = _ALTER_VIEW_RENAME_STMT.match(query)
-        if m:
-            return self._run_alter_view_rename(m.group(1), m.group(2))
-        m = _ALTER_VIEW_STMT.match(query)
-        if m:
-            return self._run_alter_view(m.group(1), m.group(2))
-        m = _DROP_VIEW_STMT.match(query)
-        if m:
-            handled = self._run_drop_view(bool(m.group(1)), m.group(2))
-            if handled is not None:
-                return handled
-        m = _DROP_TABLE_STMT.match(query)
-        if m:
-            handled = self._run_drop_table(bool(m.group(1)), m.group(2))
-            if handled is not None:
-                return handled
-        m = _EXPORT_STMT.match(query)
-        if m:
-            return self._run_export(m.group(1), m.group(3), m.group(2))
-        m = _IMPORT_STMT.match(query)
-        if m:
-            return self._run_import(m.group(1), m.group(2), m.group(3))
-        # Hive-form INSERT OVERWRITE DIRECTORY (plain / ROW FORMAT
-        # DELIMITED / STORED AS). The Spark-native `USING fmt` form does
-        # not match this regex (the body must start at SELECT/WITH/FROM)
-        # and passes through to spark.sql below.
-        m = _INSERT_DIRECTORY_STMT.match(query)
-        if m:
-            return self._run_insert_directory(m)
-        # Hive-form session temp table; the Spark-native `USING fmt`
-        # variant passes through untouched.
-        m = _CREATE_TEMP_TABLE_STMT.match(query)
-        if m and m.group(3):
-            # A datasource clause (`USING fmt`) can only appear BEFORE
-            # the CTAS `AS` keyword — `... AS SELECT a JOIN b USING (k)`
-            # is a valid Hive CTAS whose USING must not disqualify it.
-            pre_as = re.split(
-                r"\bAS\b", m.group(3), maxsplit=1, flags=re.IGNORECASE
-            )[0]
-            if not re.search(r"\bUSING\b", pre_as, re.IGNORECASE):
-                return self._run_create_temp_table(m)
-        if "avro" in query.lower() and not self._avro_native:
-            m = _CREATE_AVRO_STMT.match(query)
-            if m:
-                return self._run_create_avro_fallback(m)
-        ans = self._try_stats_answer(query)
-        if ans is not None:
-            return ans
-        ans = self._try_metadata_only(query)
-        if ans is not None:
-            return ans
-        pm = _TRANSFORM_PARTIAL_STMT.match(query)
-        if pm and (
-            pm.group(3) is None
-            or self.hiveconf.get(
-                "hive.exec.script.allow.partial.consumption", "false"
-            ).lower() == "true"
-        ):
-            # Two reasons to leave Spark's native script transform:
-            # (1) ScriptOperator's tolerated-broken-pipe mode
-            # (script_pipe.q) — native fails the task when the script
-            # exits early; (2) NO AS clause — Hive's default (key,
-            # value) schema carries last.column.takes.rest semantics
-            # (value = remainder of the line, tabs included;
-            # PlanUtils.java:257) where native truncates value to the
-            # second field. Both route through the per-partition
-            # subprocess operator.
-            return self._run_transform_partial(pm)
-        if re.search(r"\bmatchpath\s*\(\s*on\b", query, re.IGNORECASE):
-            query = self._rewrite_matchpath_calls(query)
-        if _search_code(_DTF_CALLS, query) is not None:
-            # invalid SimpleDateFormat patterns → typed NULL (Hive
-            # initialize-time behavior; Spark would raise at EXECUTION,
-            # past the error-keyed retry loop)
-            query = _rewrite_invalid_sdf_literals(query)
-        rewritten = rewrite_hiveql(query, spark=self.spark)
+        out = self._apply_steps(query, _SQL_STEPS)
+        if not isinstance(out, str):
+            return out
+        rewritten = rewrite_hiveql(out, spark=self.spark)
         # Error-keyed retry loop: each pass applies the rewrite matching
         # the exact Spark rejection (nested window hoist, SELECT-alias
         # in window spec, WINDOW-clause inheritance inlining, string/
@@ -2408,6 +1871,130 @@ class Engine:
                     raise
                 rewritten = nxt
         return self.spark.sql(rewritten)
+
+    def _run_drop_macro(self, m: re.Match[str]) -> DataFrame:
+        self.macros.pop(m.group(1).lower(), None)
+        return self._conf_frame([])
+
+    def _run_drop_database(self, m: re.Match[str], query: str) -> DataFrame:
+        self.db_props.pop(m.group(2).lower(), None)
+        return self.spark.sql(query.rstrip().rstrip(";"))
+
+    def _run_show_acid(self, kind: str) -> DataFrame:
+        """SHOW LOCKS / TRANSACTIONS / COMPACTIONS (DDLTask.showLocks,
+        showTxns, showCompactions). This engine is single-session with
+        no lock manager and no ACID manager (like Hive under the no-op
+        DummyTxnManager without ACID): the list is ALWAYS empty; the
+        typed columns mirror ShowLocksResponseElement and the txn/
+        compaction responses so tooling can still bind."""
+        return local_frame(self.spark, [], _ACID_SHOW_SCHEMAS[kind])
+
+    def _run_describe_stmt(self, m: re.Match[str]) -> DataFrame:
+        """DESCRIBE [EXTENDED|FORMATTED] t [PARTITION (...)] [col] on a
+        registered table."""
+        if m.group(4):
+            if m.group(3):
+                raise HiveQLUnsupportedError(
+                    "DESCRIBE <table> PARTITION (...) <column> is "
+                    "not supported — DESCRIBE the partition or the "
+                    "column, not both"
+                )
+            return self._run_describe_column(m.group(2), m.group(4))
+        if m.group(3):
+            return self._run_describe_partition(
+                m.group(2), m.group(3), m.group(1)
+            )
+        return self._run_describe(m.group(2), m.group(1))
+
+    def _staged_dml(self, name: str, verb: str, write) -> DataFrame:
+        """DELETE / UPDATE on a registered table: ``write(path, parts,
+        schema=..., target_df=...)`` runs the staged rewrite of
+        sources/writers.py and returns the affected count (from the
+        rewrite itself); the table then re-registers over the result."""
+        key = self._resolve_dml_table(name, mutating=True)
+        self._assert_not_mixed(key, verb)
+        path = self.table_paths[key]
+        parts = self.table_partitions.get(key)
+        affected = write(
+            path, parts,
+            schema=self._declared_schema(key),
+            target_df=(
+                self._epoch_union_frame(key, path)
+                if key in self.schema_epochs else None
+            ),
+        )
+        self.register_table(key, path, parts)
+        return self._rows_affected(affected)
+
+    def _run_delete(self, m: re.Match[str]) -> DataFrame:
+        from pyspark.sql import functions as F
+
+        from hive_2_3_2_spark.sources.writers import delete_where
+
+        return self._staged_dml(
+            m.group(1), "DELETE",
+            lambda path, parts, **kw: delete_where(
+                self.spark, path,
+                F.expr(m.group(2)) if m.group(2) else F.lit(True),
+                parts, **kw,
+            ),
+        )
+
+    def _run_update(self, m: re.Match[str]) -> DataFrame:
+        from pyspark.sql import functions as F
+
+        from hive_2_3_2_spark.sources.writers import update_where
+
+        cond_txt = m.group(3)
+        return self._staged_dml(
+            m.group(1), "UPDATE",
+            lambda path, parts, **kw: update_where(
+                self.spark, path,
+                {
+                    col: F.expr(expr)
+                    for col, expr in _split_assignments(m.group(2))
+                },
+                F.expr(cond_txt) if cond_txt else F.lit(True),
+                parts,
+                # subquery conditions can't ride the observe metric
+                observe_count=not re.search(
+                    r"\(\s*SELECT\b", cond_txt or "", re.IGNORECASE
+                ),
+                **kw,
+            ),
+        )
+
+    def _run_with_insert(self, query: str) -> DataFrame | None:
+        """Hive allows the CTE BEFORE the INSERT (WITH c AS (...) INSERT
+        INTO t SELECT ... FROM c). Split at the top-level INSERT keyword
+        and fold the CTE prefix into the insert body, which the
+        SELECT|VALUES|WITH body grammar accepts. None (fall through)
+        unless that INSERT targets a registered table."""
+        ins_pos = next(
+            (s for s, _e, w in _scan_top_keywords(query) if w == "INSERT"),
+            None,
+        )
+        if ins_pos is None:
+            return None
+        cte, rest = query[:ins_pos].rstrip(), query[ins_pos:]
+        im = _INSERT_STMT.match(rest)
+        if not (im and self._dml_registered(im.group(2))):
+            return None
+        folded = rest[: im.start(5)] + cte + " " + rest[im.start(5):]
+        return self._run_insert(_INSERT_STMT.match(folded))
+
+    def _run_touch(self, m: re.Match[str]) -> DataFrame:
+        """ALTER TABLE ... TOUCH [PARTITION] (touch.q; DDLTask touch):
+        fires hooks and bumps timestamps in Hive — a validated no-op
+        here (the named partition must exist)."""
+        if m.group(2) and self._dml_registered(m.group(1)):
+            tkey = self._resolve_dml_table(m.group(1))
+            rel = self._static_partition_reldir(tkey, m.group(2))
+            if not os.path.isdir(os.path.join(self.table_paths[tkey], rel)):
+                raise HiveQLUnsupportedError(
+                    f"TOUCH: no such partition {rel!r}"
+                )
+        return self._rows_affected(0)
 
     def _strip_temp_db_quals(self, query: str) -> str:
         """Rewrite ``<declared_db>.<temp_table>`` to the bare temp-view
@@ -2874,9 +2461,7 @@ class Engine:
             if m.group(3):
                 lines += [f"  partition spec: {m.group(3).strip()}"]
             lines += ["", "SOURCE QUERY PLAN:"]
-            src = self.spark.sql(
-                rewrite_hiveql(m.group(5), spark=self.spark)
-            )
+            src = self._body_df(m.group(5))
             return frame(lines + explain_str(src, mode=spark_mode).splitlines())
         m = _MERGE_STMT.match(inner)
         if m and self._dml_registered(m.group(1)):
@@ -2889,9 +2474,7 @@ class Engine:
                 "SOURCE PLAN:",
             ]
             if src_spec.startswith("("):
-                src = self.spark.sql(
-                    rewrite_hiveql(src_spec[1:-1], spark=self.spark)
-                )
+                src = self._body_df(src_spec[1:-1])
             else:
                 src = self.spark.table(src_spec)
             return frame(lines + explain_str(src, mode=spark_mode).splitlines())
@@ -4926,7 +4509,7 @@ class Engine:
                 return True
         return False
 
-    def _ctas_hive_autonames(self, query: str) -> str:
+    def _ctas_hive_autonames(self, query: str, m: re.Match[str]) -> str:
         """Hive names unaliased CTAS expression columns ``_c<ordinal>``
         (SemanticAnalyzer genConvertedNames; ctas_colname.q golden —
         ``create table s as select *, key+1 from src`` yields columns
@@ -4934,15 +4517,13 @@ class Engine:
         ("(key + 1)") as the column name. When the CTAS select's output
         has any non-identifier name, wrap it in a projection that
         aliases exactly those columns by ordinal — one extra Project,
-        collapsed by Catalyst."""
-        m = _CTAS_SPLIT.match(query)
-        if not m:
-            return query
+        collapsed by Catalyst. ``m`` is the statement's _CTAS_SPLIT
+        match."""
         body = m.group(2).rstrip().rstrip(";")
         try:
-            schema = self.spark.sql(
-                rewrite_hiveql(self._expand_macros(body), spark=self.spark)
-            ).schema
+            # this pass runs above the macro step of _SQL_STEPS, so the
+            # body expands its macros here
+            schema = self._body_df(self._expand_macros(body)).schema
         except Exception:
             return query  # let the real handler surface the error
         ident = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -7107,9 +6688,7 @@ class Engine:
         )
         part_on = m.group(5)
         body = m.group(6).rstrip().rstrip(";")
-        if key in self.table_paths or (
-            key not in self.views and self._is_catalog_table(key)
-        ):
+        if self._local_sink(key):
             raise HiveQLUnsupportedError(
                 f"CREATE VIEW: {key!r} already exists as a table "
                 "(AlreadyExistsException)"
@@ -7121,9 +6700,7 @@ class Engine:
                 f"CREATE VIEW: view {key!r} already exists "
                 "(use OR REPLACE / IF NOT EXISTS)"
             )
-        df = self.spark.sql(
-            rewrite_hiveql(self._expand_macros(body), spark=self.spark)
-        )
+        df = self._body_df(body)
         if aliases:
             if len(aliases) != len(df.columns):
                 raise HiveQLUnsupportedError(
@@ -7234,19 +6811,12 @@ class Engine:
                 raise HiveQLUnsupportedError(
                     f"ALTER VIEW RENAME: target {nkey!r} already exists"
                 )
-            body = self.views.pop(okey)
-            self.views[nkey] = body
+            self.views[nkey] = self.views.pop(okey)
             for store in (self.view_aliases, self.view_partitions):
                 if okey in store:
                     store[nkey] = store.pop(okey)
-            df = self.spark.sql(
-                rewrite_hiveql(self._expand_macros(body), spark=self.spark)
-            )
-            if nkey in self.view_aliases:
-                df = df.toDF(*self.view_aliases[nkey])
-            note_view_override(self.spark, nkey)
+            self._bind_view(nkey)
             note_view_override(self.spark, okey)
-            df.createOrReplaceTempView(nkey)
             self.spark.catalog.dropTempView(okey)
             return self._rows_affected(0)
         try:
@@ -7275,13 +6845,20 @@ class Engine:
             raise HiveQLUnsupportedError(f"ALTER VIEW: no such view {key!r}")
         body = body.rstrip().rstrip(";")
         note_view_override(self.spark, key)
-        self.spark.sql(
-            rewrite_hiveql(self._expand_macros(body), spark=self.spark)
-        ).createOrReplaceTempView(key)
+        self._body_df(body).createOrReplaceTempView(key)
         self.views[key] = body
         self.view_aliases.pop(key, None)
         self._refresh_dependent_views(key)
         return self._rows_affected(0)
+
+    def _bind_view(self, key: str) -> None:
+        """(Re)create engine view ``key``'s temp view from its stored
+        text and column aliases."""
+        df = self._body_df(self.views[key])
+        if key in self.view_aliases:
+            df = df.toDF(*self.view_aliases[key])
+        note_view_override(self.spark, key)
+        df.createOrReplaceTempView(key)
 
     def _refresh_dependent_views(
         self, changed: str, _done: set[str] | None = None
@@ -7304,14 +6881,7 @@ class Engine:
             ):
                 continue
             try:
-                df = self.spark.sql(
-                    rewrite_hiveql(self._expand_macros(body), spark=self.spark)
-                )
-                aliases = self.view_aliases.get(vname)
-                if aliases:
-                    df = df.toDF(*aliases)
-                note_view_override(self.spark, vname)
-                df.createOrReplaceTempView(vname)
+                self._bind_view(vname)
             except Exception:
                 try:
                     note_view_override(self.spark, vname)
@@ -7768,10 +7338,8 @@ class Engine:
         if simple and len(segments) > 1:
             from pyspark import StorageLevel
 
-            shared_src = self.spark.sql(
-                rewrite_hiveql(
-                    f"SELECT * FROM {simple.group(1)}", spark=self.spark
-                )
+            shared_src = self._body_df(
+                f"SELECT * FROM {simple.group(1)}"
             ).persist(StorageLevel.MEMORY_AND_DISK)
             shared_src.createOrReplaceTempView("__mi_shared_src")
             # Re-alias the shared view as the source's own name (or the
@@ -7886,16 +7454,13 @@ class Engine:
                     )
                 seen_overwrite.add(sink)
             tgt = im.group(2)
-            if self._dml_registered(tgt):
-                n = self._run_insert(im).collect()[0].rows_affected
-            elif self._is_catalog_table(tgt):
-                n = self._run_insert_catalog(im).collect()[0].rows_affected
-            else:
+            if not self._local_sink(tgt):
                 raise HiveQLUnsupportedError(
                     f"multi-insert branch target {tgt!r} is not writable "
                     "here (unknown table) — register the table with the "
                     "Engine or use a standalone INSERT statement"
                 )
+            n = self._run_insert_sink(im).collect()[0].rows_affected
             results.append((tgt.split(".")[-1].lower(), n))
 
     def _run_load_data(self, m: re.Match[str]) -> DataFrame:
@@ -8029,7 +7594,7 @@ class Engine:
                 f"PARTITION spec names non-partition column(s) {bad} "
                 f"(table {key!r} is partitioned by {parts or 'nothing'})"
             )
-        src = self.spark.sql(rewrite_hiveql(body, spark=self.spark))
+        src = self._body_df(body)
         # Positional mapping references source columns by name — rename
         # them first so auto-generated names with dots (a literal 1.5
         # yields a column literally named "1.5", which F.col would parse
@@ -8256,7 +7821,7 @@ class Engine:
         fields = {f.name: f.dataType for f in target.schema.fields}
         sfields = {f.name: f for f in target.schema.fields}
         by_lower = {n.lower(): n for n in fields}
-        src = self.spark.sql(rewrite_hiveql(body, spark=self.spark))
+        src = self._body_df(body)
         src = src.toDF(*[f"__src_c{i}" for i in range(len(src.columns))])
         if part_txt:
             return self._insert_catalog_partitioned(
@@ -8458,9 +8023,7 @@ class Engine:
                 raise HiveQLUnsupportedError(
                     "MERGE USING (subquery) requires an alias"
                 )
-            source = self.spark.sql(
-                rewrite_hiveql(src_spec[1:-1], spark=self.spark)
-            )
+            source = self._body_df(src_spec[1:-1])
         else:
             source = self.spark.table(src_spec)
             salias = salias or src_spec.split(".")[-1]
@@ -8674,11 +8237,9 @@ class Engine:
             if um is None:  # AS clause or unexpected tail → native
                 pos = close
                 continue
-            src = rewrite_hiveql(
-                f"SELECT {args} FROM {m.group(1)}", spark=self.spark
-            )
             df = transform_script_partial(
-                self.spark.sql(src), um.group(1), ["key", "value"],
+                self._body_df(f"SELECT {args} FROM {m.group(1)}"),
+                um.group(1), ["key", "value"],
                 rest_of_line=True,
             )
             self._matchpath_seq = getattr(self, "_matchpath_seq", 0) + 1
@@ -8710,13 +8271,11 @@ class Engine:
             for part in outs.strip().strip("()").split(",")
             if part.strip()
         ]
-        src = rewrite_hiveql(
-            f"SELECT {cols.strip()} FROM {rest.strip().rstrip(';')}",
-            spark=self.spark,
+        src = self._body_df(
+            f"SELECT {cols.strip()} FROM {rest.strip().rstrip(';')}"
         )
         return transform_script_partial(
-            self.spark.sql(src), cmd, out_names,
-            rest_of_line=rest_of_line,
+            src, cmd, out_names, rest_of_line=rest_of_line
         )
 
     def _rewrite_noop_ptf_calls(self, query: str) -> str:
@@ -8882,9 +8441,7 @@ class Engine:
                 )
             from hive_2_3_2_spark.operators.ptf import match_path
 
-            df = self.spark.sql(
-                rewrite_hiveql(f"SELECT * FROM {src}", spark=self.spark)
-            )
+            df = self._body_df(f"SELECT * FROM {src}")
             import pandas as pd  # noqa: F401 — predicate closures
 
             symbols = {}
@@ -9210,9 +8767,7 @@ class Engine:
         from pyspark.sql import functions as F
 
         local, path, sep, stored, body = m.groups()
-        df = self.spark.sql(
-            rewrite_hiveql(self._expand_macros(body.strip()), spark=self.spark)
-        )
+        df = self._body_df(body.strip())
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("n"))
         fmt = (stored or "").lower()
@@ -9252,9 +8807,7 @@ class Engine:
 
         from hive_2_3_2_spark.plans import explain_str
 
-        df = self.spark.sql(
-            rewrite_hiveql(self._expand_macros(body), spark=self.spark)
-        )
+        df = self._body_df(body)
         files = [re.sub(r"^file:/+", "/", f) for f in df.inputFiles()]
         tables: set[str] = set()
         part_dirs: dict[str, set[str]] = {}
@@ -9370,6 +8923,352 @@ class Engine:
 # _NOOP_PTF_HEAD (the single module-level definition lives further
 # down, next to the FROM-item machinery) matches the whole noop PTF
 # family: noop/noopwithmap/noopstreaming/noopwithmapstreaming.
+# --------------------------------------------------------------------------
+# Engine.sql's ordered step table. Hive makes the same two decisions
+# from tables: SemanticAnalyzerFactory.get picks the analyzer for a
+# statement kind (Driver.java:629) and optimizer/Optimizer.java applies
+# an ordered list of rule passes. Each row is ``(test, step)``:
+#   - ``test`` is a compiled pattern (matched at the start of the
+#     statement) or a guard ``(engine, query) -> match | truthy``; a
+#     falsy result skips the row;
+#   - ``step(engine, query, m)`` gets the test's result as ``m`` and
+#     returns a str (a pass: the rows below see the new text), a
+#     DataFrame (a route: the statement's answer) or None (fall through).
+# --------------------------------------------------------------------------
+
+#: matches every statement (rows that decide inside their step)
+_EVERY_STATEMENT = re.compile("")
+_WITH_HEAD = re.compile(r"^\s*WITH\b", re.IGNORECASE)
+_ACID_SHOW_SCHEMAS = {
+    "LOCKS": "lockid string, database string, tab_name string, "
+    "partition string, lock_state string, lock_type string, "
+    "transaction_id string",
+    "TRANSACTIONS": "txnid bigint, state string, startedtime bigint, "
+    "lastheartbeattime bigint, user string, host string",
+    "COMPACTIONS": "compactionid bigint, dbname string, tabname string, "
+    "partname string, type string, state string, workerid string, "
+    "starttime bigint, duration bigint",
+}
+
+
+def _when(pat, pred):
+    """Guard: ``pat`` matches and ``pred(engine, match)`` holds."""
+    return lambda e, q: (m := pat.match(q)) and pred(e, m) and m
+
+
+def _registered(pat, g=1):
+    """Guard: group ``g`` of ``pat`` names a table this Engine
+    registered (Engine._dml_registered)."""
+    return _when(pat, lambda e, m: e._dml_registered(m.group(g)))
+
+
+def _registered_or_catalog(pat, g=1):
+    """Guard: group ``g`` of ``pat`` names a registered table or a
+    session-catalog table."""
+    return _when(pat, lambda e, m: e._dml_registered(m.group(g))
+                 or e._is_catalog_table(m.group(g)))
+
+
+def _finds(regex, code_only=False):
+    """Guard: ``regex`` occurs anywhere in the statement (outside quoted
+    literals when ``code_only``)."""
+    pat = re.compile(regex)
+    if code_only:
+        return lambda e, q: _search_code(pat, q) is not None
+    return lambda e, q: pat.search(q)
+
+
+def _refuse(msg):
+    """Step: a typed error; ``{}`` fields take the match's groups."""
+
+    def step(e, q, m):
+        raise HiveQLUnsupportedError(msg.format(*m.groups()))
+
+    return step
+
+
+def _bare(name: str) -> str:
+    return name.split(".")[-1].lower()
+
+
+#: Value-semantics passes: Hive RUNTIME semantics (type coercion,
+#: lenient date parses, GROUP BY constant mode), not statement syntax.
+#: They run once per statement inside _SQL_STEPS, so a SELECT body a
+#: handler lifts out of a CTAS or a view already carries them.
+_SEMANTIC_STEPS = (
+    # Reference DEFAULT is false (HiveConf.java:1337): integral/boolean
+    # → TIMESTAMP counts MILLISECONDS.
+    (lambda e, q: e.hiveconf.get(
+        "hive.int.timestamp.conversion.in.seconds", "false"
+    ).lower() == "false" and re.search(r"(?i)\btimestamp\b", q),
+     lambda e, q, m: _rewrite_int_ts_casts(q)),
+    (lambda e, q: re.search(r"(?i)\b(?:GROUP|ORDER|SORT)\s+BY\b", q)
+     and re.search(r"(?<![\w.'\"`])\d", q),
+     lambda e, q, m: e._rewrite_position_aliases(q)),
+    # the internal stats UDAF's direct spelling → native aggregate
+    # struct composition (type-dispatched)
+    (_finds(Engine._COMPUTE_STATS_CALL),
+     lambda e, q, m: e._rewrite_compute_stats(q)),
+    # Hive's hash() is the getBucketHashCode 31-fold, NOT Spark's
+    # Murmur3 — schema-resolved typed rewrite
+    (_finds(Engine._HIVE_HASH_CALL, code_only=True),
+     lambda e, q, m: e._rewrite_hive_hash(q)),
+    # Hive's getBoolean conversions (string non-empty, numeric
+    # (int)-truncated) — schema-resolved
+    (_finds(r"(?is)\bas\s+boolean\s*\)"),
+     lambda e, q, m: e._rewrite_boolean_casts(q)),
+    # string IN (numeric subquery) compares at DOUBLE in Hive
+    (_finds(r"(?is)\bin\s*\(\s*select\b"),
+     lambda e, q, m: e._rewrite_string_in_numeric_subquery(q)),
+    # GenericUDFAbs evaluates BYTE/SHORT at INT width
+    # (GenericUDFAbs.java:80-86: abs(tinyint -128) is 128, where Spark
+    # wraps at the byte width to -128)
+    (_finds(r"(?is)\babs\s*\("), lambda e, q, m: e._rewrite_abs_promote(q)),
+    # Hive's lenient string parse for add_months (rollover) — must
+    # precede the months_between rewrite, which emits internal
+    # add_months calls of its own
+    (_finds(r"(?i)\badd_months\s*\("),
+     lambda e, q, m: e._rewrite_add_months_typed(q)),
+    # Hive's lenient string parse for months_between operands (rollover
+    # + partial-time skip) — real golden divergences
+    (_finds(r"(?i)\bmonths_between\s*\("),
+     lambda e, q, m: e._rewrite_months_between_typed(q)),
+    # decimal-vs-float-literal comparisons compare at FLOAT in Hive
+    # (parquet_ppd_decimal.q) — typeof-dispatched rewrite
+    (_finds(r"(?i)\bAS\s+FLOAT\s*\)"),
+     lambda e, q, m: _rewrite_float_cast_compares(q)),
+    # decimal IN ('quoted numerics') — Hive's numeric IN route
+    (_finds(r"(?i)\bIN\s*\(\s*'-?\d"),
+     lambda e, q, m: _rewrite_decimal_in_strings(q)),
+    # decimal COLUMN vs float COLUMN comparisons happen at FLOAT in
+    # Hive — schema-resolved static rewrite
+    (_finds(r"[=<>]"),
+     lambda e, q, m: e._rewrite_decimal_float_col_compares(q)),
+    # pre-Gregorian timestamp filters must not reach the ORC
+    # SearchArgument (hybrid-calendar stripe elimination)
+    (lambda e, q: any(
+        int(t.group(1)) < 1583
+        for t in re.finditer(r"(?i)\btimestamp\s+'(\d{1,4})-", q)
+    ), lambda e, q, m: _rewrite_ancient_ts_filters(q)),
+)
+
+_SQL_STEPS = (
+    # special-character table names; regex-column mode
+    # (quoted.identifiers=none) keeps its backticked patterns
+    (lambda e, q: "`" in q and e.hiveconf.get(
+        "hive.support.quoted.identifiers", "column"
+    ).lower() != "none",
+     lambda e, q, m: _SPECIAL_IDENT.sub(
+         lambda s: _mangle_special_name(s.group(1)), q)),
+    (lambda e, q: "default" in q.lower(),
+     lambda e, q, m: e._strip_default_db(q)),
+    # temp tables SHADOW same-named permanent tables even under their
+    # declared-db qualifier (SessionHiveMetaStoreClient getTempTable
+    # resolves before the metastore; temp_table_precedence.q) — but
+    # Spark resolves db.t against the catalog, so rewrite the qualified
+    # form to the bare temp-view name.
+    (lambda e, q: e.temp_tables and "." in q,
+     lambda e, q, m: e._strip_temp_db_quals(q)),
+    # inline PK/FK constraint items (create_with_constraints.q) are
+    # recorded engine-side and stripped — Spark's CREATE grammar has no
+    # constraint clause
+    (lambda e, q: re.search(r"(?i)\b(?:PRIMARY|FOREIGN)\s+KEY\b", q)
+     and _CREATE_TABLE_PREFIX.match(q),
+     lambda e, q, m: e._extract_create_constraints(q)),
+    *_SEMANTIC_STEPS,
+    # Hive's MAP/REDUCE spellings of script transform normalize to the
+    # TRANSFORM form before ANY dispatch, so the FROM-first INSERT
+    # branch parser and spark.sql both see one spelling.
+    (_finds(_MAP_REDUCE_KW, code_only=True),
+     lambda e, q, m: _rewrite_map_reduce_transform(q)),
+    # no-AS TRANSFORM subqueries evaluate eagerly (takes-rest output
+    # contract) and splice back as views, BEFORE the INSERT/multi-insert
+    # dispatch reads the statement
+    (_finds(Engine._NOAS_TRANSFORM_SUBQ, code_only=True),
+     lambda e, q, m: e._rewrite_noas_transform_subqueries(q)),
+    (lambda e, q: e.ptf_aliases or e.fn_aliases,
+     lambda e, q, m: e._rewrite_function_aliases(q)),
+    (lambda e, q: e.python_udtfs, lambda e, q, m: e._rewrite_udtf_select(q)),
+    # Noop pass-through PTFs reduce to subqueries before ANY dispatch
+    # (they appear in FROM-first multi-insert too).
+    (_finds(_NOOP_PTF_HEAD, code_only=True),
+     lambda e, q, m: e._rewrite_noop_ptf_calls(q)),
+    (_CTAS_SPLIT, lambda e, q, m: e._ctas_hive_autonames(q, m)),
+    (_SHELL_STMT, _refuse(
+        "'!' shell escape is not supported — no shell execution from "
+        "SQL in this engine (CliDriver.processCmd shell path)")),
+    (_DFS_STMT, _refuse(
+        "'dfs' commands are not supported — there is no HDFS shell "
+        "here; use LOAD DATA / EXPORT / IMPORT instead")),
+    (_SET_STMT, lambda e, q, m: e._run_set(m.group(1))),
+    (_RESET_STMT, lambda e, q, m: e.hiveconf.clear() or e._conf_frame([])),
+    (_RESOURCE_STMT, lambda e, q, m: e._run_resource(*m.groups())),
+    (_SOURCE_STMT, lambda e, q, m: e._run_source(m.group(1))),
+    (_CREATE_MACRO_STMT, lambda e, q, m: e._run_create_macro(m)),
+    (_DROP_MACRO_STMT, lambda e, q, m: e._run_drop_macro(m)),
+    (_CREATE_FUNCTION_STMT, lambda e, q, m: e._run_create_function(m)),
+    (_DROP_FUNCTION_STMT, lambda e, q, m: e._run_drop_function(m)),
+    (_SHOW_FUNCTIONS_STMT, lambda e, q, m: e._run_show_functions(m.group(1))),
+    (_DESCRIBE_FUNCTION_STMT, lambda e, q, m: e._run_describe_function(
+        bool(m.group(1)), m.group(2).strip("`"))),
+    (_SHOW_CONF_STMT, lambda e, q, m: e._run_show_conf(m.group(1))),
+    (_SHOW_ACID_STMT,
+     lambda e, q, m: e._run_show_acid((m.group(1) or m.group(2)).upper())),
+    (_CREATE_DB_STMT, lambda e, q, m: e._run_create_database(m)),
+    (_ALTER_DB_STMT, lambda e, q, m: e._run_alter_database(m)),
+    (_DESC_DB_STMT, lambda e, q, m: e._run_describe_database(
+        bool(m.group(1)), m.group(2))),
+    (_SHOW_CREATE_DB_STMT,
+     lambda e, q, m: e._run_show_create_database(m.group(1))),
+    (_DROP_DB_STMT, lambda e, q, m: e._run_drop_database(m, q)),
+    (_ALTER_CLUSTERED_STMT, _refuse(
+        "ALTER TABLE {} CLUSTERED BY / NOT CLUSTERED: Hive changes "
+        "bucket metadata for FUTURE writes while existing files keep "
+        "their layout — Spark's planner trusts the (immutable) bucket "
+        "spec for shuffle elision, so a drifted spec would return "
+        "wrong joins. CREATE a new table with the target CLUSTERED BY "
+        "and INSERT ... SELECT to migrate")),
+    (_registered(_CREATE_LIKE_STMT, 3), lambda e, q, m: e._run_create_like(m)),
+    (lambda e, q: e.macros, lambda e, q, m: e._expand_macros(q)),
+    (_EXPLAIN_ANALYZE_STMT,
+     lambda e, q, m: e._run_explain_analyze(m.group(1))),
+    (_EXPLAIN_STMT, lambda e, q, m: e._run_explain_dependency(m.group(2))
+     if (m.group(1) or "").upper() == "DEPENDENCY"
+     else e._explain_dml(m.group(1), m.group(2))),
+    (_when(_SHOW_CREATE_STMT, lambda e, m: e._dml_registered(m.group(1))
+           or _bare(m.group(1)) in e.views),
+     lambda e, q, m: e._run_show_create(m.group(1))),
+    (_registered(_DESCRIBE_STMT, 2), lambda e, q, m: e._run_describe_stmt(m)),
+    # catalog table with recorded informational constraints — Spark's
+    # DESCRIBE + the Constraints section
+    (_when(_DESCRIBE_STMT, lambda e, m: m.group(1) and not m.group(3)
+           and not m.group(4) and _bare(m.group(2)) in e.table_constraints
+           and (e._is_catalog_table(m.group(2))
+                or e._is_catalog_table(_bare(m.group(2))))),
+     lambda e, q, m: e._describe_catalog_with_constraints(
+         m.group(2), _bare(m.group(2)), m.group(1))),
+    (_registered(_DELETE_STMT), lambda e, q, m: e._run_delete(m)),
+    (_registered(_UPDATE_STMT), lambda e, q, m: e._run_update(m)),
+    # Hive's IF NOT EXISTS overwrite guard: when the STATIC target
+    # partition already exists, the insert is a no-op — the select never
+    # runs (insert1_overwrite_partitions.q); otherwise the clause is
+    # stripped for the INSERT routes below.
+    (_registered_or_catalog(_INSERT_IF_NOT_EXISTS, 2),
+     lambda e, q, m: e._rows_affected(0)
+     if e._static_partition_exists(m.group(2), m.group(3))
+     else q[: m.end(1)] + q[m.end(0):]),
+    # PARTITION specs (static/dynamic/mixed) into catalog tables are
+    # handled with Hive's positional casts + partition-overwrite
+    # semantics
+    (_when(_INSERT_STMT, lambda e, m: e._local_sink(m.group(2))),
+     lambda e, q, m: e._run_insert_sink(m)),
+    (_WITH_HEAD, lambda e, q, m: e._run_with_insert(q)),
+    (_when(_MULTI_INSERT_STMT, lambda e, m: e._local_sinks(m.group(2))),
+     lambda e, q, m: e._run_multi_insert(m.group(1), m.group(2))),
+    (_registered(_LOAD_DATA_STMT, 3), lambda e, q, m: e._run_load_data(m)),
+    (_registered(_MERGE_STMT), lambda e, q, m: e._run_merge(m)),
+    (_registered(_TRUNCATE_STMT), lambda e, q, m: e._run_truncate(m)),
+    (_when(_SHOW_PARTITIONS_STMT,
+           lambda e, m: _bare(m.group(1)) in e.view_partitions),
+     lambda e, q, m: e._run_show_view_partitions(_bare(m.group(1)))),
+    (_registered(_SHOW_PARTITIONS_STMT),
+     lambda e, q, m: e._run_show_partitions(m.group(1), m.group(2))),
+    (_registered(_ALTER_PARTITION_STMT),
+     lambda e, q, m: e._run_alter_partition(m)),
+    (_CONCATENATE_STMT, lambda e, q, m: e._run_concatenate(m)),
+    (_registered(_MSCK_STMT), lambda e, q, m: e._run_msck(m.group(1))),
+    (_registered(_REFRESH_STMT), lambda e, q, m: e._run_refresh(m.group(1))),
+    (_registered(_ANALYZE_STMT),
+     lambda e, q, m: e._run_analyze(m.group(1), m.group(3), m.group(2))),
+    (_registered(_RENAME_STMT), lambda e, q, m: e._run_rename(*m.group(1, 2))),
+    (_registered(_EXCHANGE_PARTITION_STMT),
+     lambda e, q, m: e._run_exchange_partition(m)),
+    (_registered(_RENAME_PARTITION_STMT),
+     lambda e, q, m: e._run_rename_partition(m)),
+    (_registered(_SET_LOCATION_STMT),
+     lambda e, q, m: e._run_set_location(*m.group(1, 2))),
+    (_registered(_ALTER_ADD_COLS_STMT),
+     lambda e, q, m: e._run_add_columns(*m.group(1, 2))),
+    (_registered(_ALTER_REPLACE_COLS_STMT),
+     lambda e, q, m: e._run_replace_columns(*m.group(1, 2))),
+    (_registered(_ALTER_PART_COLTYPE_STMT),
+     lambda e, q, m: e._run_partition_coltype(*m.group(1, 2, 3))),
+    (_registered(_ALTER_CHANGE_COL_STMT),
+     lambda e, q, m: e._run_change_column(m)),
+    (_registered(_ALTER_TBLPROPS_STMT),
+     lambda e, q, m: e._run_tblproperties(m)),
+    (_ALTER_FILEFORMAT_STMT,
+     lambda e, q, m: e._run_set_fileformat(*m.group(1, 2, 3))),
+    (_registered_or_catalog(_ALTER_SET_SERDE_STMT),
+     lambda e, q, m: e._run_set_serde(*m.group(1, 2, 3, 4))),
+    (_registered_or_catalog(_ALTER_SET_SERDEPROPS_STMT),
+     lambda e, q, m: e._run_set_serde(*m.group(1, 2), None, m.group(3))),
+    (_registered_or_catalog(_ALTER_TOUCH_STMT),
+     lambda e, q, m: e._run_touch(m)),
+    (_ALTER_ADD_CONSTRAINT_STMT, lambda e, q, m: e._run_add_constraint(m)),
+    (_ALTER_DROP_CONSTRAINT_STMT, lambda e, q, m: e._run_drop_constraint(m)),
+    (_registered_or_catalog(_SHOW_TABLE_EXTENDED_STMT),
+     lambda e, q, m: e._run_show_table_extended(*m.group(1, 2))),
+    # catalog tables with engine-side props (SET SERDE / SERDEPROPERTIES
+    # route through the engine because Spark refuses ALTER SERDE on
+    # datasource tables) — serve the MERGED view so the recorded
+    # metadata is observable
+    (_when(_SHOW_TBLPROPS_STMT, lambda e, m: e._dml_registered(m.group(1))
+           or _bare(m.group(1)) in e.table_props),
+     lambda e, q, m: e._run_show_tblproperties(*m.group(1, 2))),
+    (_registered(_SHOW_COLUMNS_STMT),
+     lambda e, q, m: e._run_show_columns(m.group(1))),
+    (_CREATE_VIEW_STMT, lambda e, q, m: e._run_create_view(m)),
+    (_ALTER_VIEW_PART_STMT, lambda e, q, m: e._run_alter_view_partition(m)),
+    (_ALTER_VIEW_RENAME_STMT,
+     lambda e, q, m: e._run_alter_view_rename(*m.group(1, 2))),
+    (_ALTER_VIEW_STMT, lambda e, q, m: e._run_alter_view(*m.group(1, 2))),
+    # DROP VIEW / DROP TABLE of an object the engine does not manage
+    # declines (None) and falls through to spark.sql
+    (_DROP_VIEW_STMT,
+     lambda e, q, m: e._run_drop_view(bool(m.group(1)), m.group(2))),
+    (_DROP_TABLE_STMT,
+     lambda e, q, m: e._run_drop_table(bool(m.group(1)), m.group(2))),
+    (_EXPORT_STMT,
+     lambda e, q, m: e._run_export(m.group(1), m.group(3), m.group(2))),
+    (_IMPORT_STMT, lambda e, q, m: e._run_import(*m.group(1, 2, 3))),
+    # Hive-form INSERT OVERWRITE DIRECTORY (plain / ROW FORMAT DELIMITED
+    # / STORED AS). The Spark-native `USING fmt` form does not match
+    # this regex (the body must start at SELECT/WITH/FROM) and passes
+    # through to spark.sql.
+    (_INSERT_DIRECTORY_STMT, lambda e, q, m: e._run_insert_directory(m)),
+    # Hive-form session temp table; the Spark-native `USING fmt` variant
+    # passes through untouched. A datasource clause (`USING fmt`) can
+    # only appear BEFORE the CTAS `AS` keyword — `... AS SELECT a JOIN b
+    # USING (k)` is a valid Hive CTAS whose USING must not disqualify it.
+    (_when(_CREATE_TEMP_TABLE_STMT, lambda e, m: m.group(3) and not re.search(
+        r"(?i)\bUSING\b", re.split(r"(?i)\bAS\b", m.group(3), maxsplit=1)[0]
+    )), lambda e, q, m: e._run_create_temp_table(m)),
+    (_when(_CREATE_AVRO_STMT, lambda e, m: not e._avro_native),
+     lambda e, q, m: e._run_create_avro_fallback(m)),
+    (_EVERY_STATEMENT, lambda e, q, m: e._try_stats_answer(q)),
+    (_EVERY_STATEMENT, lambda e, q, m: e._try_metadata_only(q)),
+    # Two reasons to leave Spark's native script transform: (1)
+    # ScriptOperator's tolerated-broken-pipe mode (script_pipe.q) —
+    # native fails the task when the script exits early; (2) NO AS
+    # clause — Hive's default (key, value) schema carries
+    # last.column.takes.rest semantics (value = remainder of the line,
+    # tabs included; PlanUtils.java:257) where native truncates value
+    # to the second field. Both route through the per-partition
+    # subprocess operator.
+    (_when(_TRANSFORM_PARTIAL_STMT, lambda e, m: m.group(3) is None
+           or e.hiveconf.get("hive.exec.script.allow.partial.consumption",
+                             "false").lower() == "true"),
+     lambda e, q, m: e._run_transform_partial(m)),
+    (_finds(r"(?i)\bmatchpath\s*\(\s*on\b"),
+     lambda e, q, m: e._rewrite_matchpath_calls(q)),
+    # invalid SimpleDateFormat patterns → typed NULL (Hive
+    # initialize-time behavior; Spark would raise at EXECUTION, past the
+    # error-keyed retry loop)
+    (_finds(_DTF_CALLS, code_only=True),
+     lambda e, q, m: _rewrite_invalid_sdf_literals(q)),
+)
+
 _PTF_CLAUSE_SPLIT = re.compile(
     r"\b(partition\s+by|distribute\s+by|sort\s+by|order\s+by)\b",
     re.IGNORECASE,
@@ -9957,6 +9856,26 @@ def _store_cast(col, field):
     return col.cast(field.dataType)
 
 
+#: rewrite_hiveql's text passes, applied in this order
+_TEXT_PASSES = (
+    _dedup_grouping_sets,
+    _rewrite_greatest_least,
+    _rewrite_field_calls,
+    _rewrite_noop_ptf,
+    _reorder_forward_ctes,
+    lambda q: _HINT_BEFORE_TRANSFORM.sub(r"\1\2", q),
+    _rewrite_distinct_window,
+    _rewrite_udf_hive_semantics,
+    _rewrite_tuple_in,
+    _rewrite_interval_ctors,
+    _rewrite_mask_family,
+    _rewrite_replicate_rows,
+    _rewrite_trunc_quarter,
+    _rewrite_json_path_dot_bracket,
+    _rewrite_printf_double_literals,
+)
+
+
 def rewrite_hiveql(query: str, spark: SparkSession | None = None) -> str:
     """Apply the (small) set of HiveQL→Spark SQL rewrites.
 
@@ -9966,31 +9885,8 @@ def rewrite_hiveql(query: str, spark: SparkSession | None = None) -> str:
     reproduce, so those raise HiveQLUnsupportedError instead of silently
     returning a different row set than Hive.
     """
-    query = _reorder_forward_ctes(
-        _rewrite_noop_ptf(
-            _rewrite_field_calls(
-                _rewrite_greatest_least(_dedup_grouping_sets(query))
-            )
-        )
-    )
-    query = _HINT_BEFORE_TRANSFORM.sub(r"\1\2", query)
-    query = _rewrite_printf_double_literals(
-        _rewrite_json_path_dot_bracket(
-            _rewrite_trunc_quarter(
-                _rewrite_replicate_rows(
-                    _rewrite_mask_family(
-                        _rewrite_interval_ctors(
-                            _rewrite_tuple_in(
-                                _rewrite_udf_hive_semantics(
-                                    _rewrite_distinct_window(query)
-                                )
-                            )
-                        )
-                    )
-                )
-            )
-        )
-    )
+    for text_pass in _TEXT_PASSES:
+        query = text_pass(query)
     un = _UNSUPPORTED_VIRTUAL.search(query)
     if un:
         raise HiveQLUnsupportedError(

@@ -213,7 +213,17 @@ def rolling_shingle_fingerprint_portable(text: Column, k: int = 5) -> Column:
     one window is the '' token, h = 0). The (h, p) array is bound as a
     one-element transform's lambda variable so it is evaluated ONCE per
     row regardless of how many times the composition references it
-    (a Column expression has no projection to alias it in)."""
+    (a Column expression has no projection to alias it in).
+
+    Each composition step is written ``s·X_j + Y_j`` with the guard
+    inside X_j (``31·p`` or 1) and Y_j (``32·p + h`` or 0), so ``s``
+    appears once per step and the expression grows linearly in ``k``
+    (a ``when(..., f(s)).otherwise(s)`` step doubles the tree per word:
+    424 k characters of expression text at k=12). The values are the
+    same: int32 wrap arithmetic is a ring, so ``s·31·p`` = ``s·(31·p)``.
+    ``k`` < 1 raises ValueError (there is no 0-word shingle)."""
+    if k < 1:
+        raise ValueError(f"shingle length k must be >= 1, got {k}")
     toks = F.split(F.coalesce(normalize_for_fingerprint(text), F.lit("")), " ")
     hp_arr = F.transform(
         toks,
@@ -234,12 +244,12 @@ def rolling_shingle_fingerprint_portable(text: Column, k: int = 5) -> Column:
             s = F.element_at(hp, i).getField("h")
             for j in range(1, k):
                 e = F.element_at(hp, i + F.lit(j))
-                s = F.when(
-                    i + F.lit(j) <= n,
-                    s * 31 * e.getField("p")
-                    + F.lit(32) * e.getField("p")
-                    + e.getField("h"),
-                ).otherwise(s)
+                inside = i + F.lit(j) <= n
+                x = F.when(inside, e.getField("p") * 31).otherwise(1)
+                y = F.when(
+                    inside, F.lit(32) * e.getField("p") + e.getField("h")
+                ).otherwise(0)
+                s = s * x + y
             return s
 
         windows = F.transform(

@@ -12,6 +12,7 @@ them.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hive_2_3_2_spark.catalog import load_table
@@ -53,6 +54,45 @@ def test_portable_rfp_jvm_fold_edge_cases(spark):
         "doc_id",
         T.rolling_shingle_fingerprint_portable(F.col("text")).alias("jvm"),
         T._portable_rfp_udf(5)(
+            T.normalize_for_fingerprint(F.col("text"))
+        ).alias("udf"),
+    )
+    for r in both.collect():
+        assert r.jvm == r.udf, f"doc {r.doc_id}: {r.jvm} != {r.udf}"
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_portable_rfp_rejects_k_below_one(k):
+    """There is no 0-word shingle: k < 1 is a typed error, not a NULL
+    fingerprint."""
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        T.rolling_shingle_fingerprint_portable(F.col("text"), k=k)
+
+
+def test_portable_rfp_expression_linear_in_k(spark):
+    """Each shingle step references the running hash once, so the
+    expression grows by the same amount per word (it used to double:
+    424 k characters at k=12), and k=32 builds and still matches the
+    UDF reference."""
+
+    def size(k):
+        return len(str(T.rolling_shingle_fingerprint_portable(
+            F.col("text"), k=k
+        )))
+
+    step = size(10) - size(9)
+    assert abs((size(12) - size(11)) - step) <= 8
+    assert size(32) < size(8) + 26 * step
+    words = " ".join(f"w{i}" for i in range(40))
+    df = spark.createDataFrame(
+        [(1, words), (2, "a b c"), (3, "")], "doc_id long, text string"
+    )
+    both = df.select(
+        "doc_id",
+        T.rolling_shingle_fingerprint_portable(F.col("text"), k=32).alias(
+            "jvm"
+        ),
+        T._portable_rfp_udf(32)(
             T.normalize_for_fingerprint(F.col("text"))
         ).alias("udf"),
     )
@@ -168,7 +208,11 @@ def test_ann_boolean_entries_count_plan_not_eliminated(spark, sf_dir):
     from hive_2_3_2_spark.suite import load_all
 
     registry = load_all()
-    for name in ("similarity_topk_ivf", "similarity_probe_only"):
+    # every entry that emits its result through _recall_booleans
+    for name in (
+        "similarity_topk_ivf", "similarity_probe_only",
+        "similarity_topk_pq", "similarity_topk_ivfpq",
+    ):
         df = registry[name].fn(spark, sf_dir)
         plan = (
             df.groupBy().count()._jdf.queryExecution().optimizedPlan().toString()
